@@ -26,10 +26,10 @@ object SparkEntry {
           codecs.be_int4_encode(lit(-1)))
         .otherwise(codecs.be_int4_encode(
           floor(least(col("value"), lit(64.0))).cast("int"))).as("value"))
-    // One pass: branchTag labels each record with its route through the
-    // SAME stage predicates as the four-branch topology, so the flagship
-    // reads its input once (the round-1 union-of-branches shape scanned
-    // the source 4x — ErrorHandlingTopologySpec pins the equivalence).
+    // One pass: branchTag labels each record with the branch of the same
+    // routing definition the four-branch topology filters on, so the
+    // flagship reads its input once (the round-1 union-of-branches shape
+    // scanned the source 4x — ErrorChannelSpec pins the equivalence).
     ErrorHandlingTopology.branchTag(records)
       .groupBy("branch").agg(count(lit(1)).as("n"))
   }

@@ -6,9 +6,11 @@ import org.apache.spark.sql.types._
 
 import graft.functions.codecs
 
-/** Columnar building blocks of the dead-letter topology. Every stage is
-  * a pure `DataFrame => DataFrame` so identical code runs in batch (for
-  * tests + oracle) and inside `foreachBatch` under Structured Streaming
+/** Columnar building blocks of the dead-letter topology, composed by
+  * `ErrorHandlingTopology.route`. Every stage is a pure
+  * `DataFrame => DataFrame` or `Column` builder, so identical code runs
+  * in batch (for tests + oracle) and inside `foreachBatch` under
+  * Structured Streaming
   * — the same testability trick the reference gets from building its
   * topology through an injectable `StreamsBuilder`
   * (reference: .../topology/ErrorHandlingTopology.java:27-44).
@@ -50,13 +52,17 @@ object ErrorChannel {
   def errorHeader(msg: Column): Column =
     struct(lit(ErrorHeaderKey).as("key"), encode(msg, "UTF-8").as("value"))
 
-  /** Append an `error.message` header, preserving any existing headers
-    * (the reference appends to the record's mutable header list). */
+  /** `existing` headers (NULL counts as none) with an `error.message`
+    * header appended (the reference appends to the record's mutable
+    * header list). */
+  def appendErrorHeader(existing: Column, msg: Column): Column =
+    concat(coalesce(existing, emptyHeaders), array(errorHeader(msg)))
+
+  /** Append an `error.message` header, preserving any existing headers. */
   def withErrorHeader(df: DataFrame, msg: Column): DataFrame = {
     val existing =
-      if (df.columns.contains("headers")) coalesce(col("headers"), emptyHeaders)
-      else emptyHeaders
-    df.withColumn("headers", concat(existing, array(errorHeader(msg))))
+      if (df.columns.contains("headers")) col("headers") else lit(null).cast(HeaderType)
+    df.withColumn("headers", appendErrorHeader(existing, msg))
   }
 
   // ---------------------------------------------------------------------
@@ -73,20 +79,6 @@ object ErrorChannel {
     records
       .withColumn("key_str", col("key").cast("string"))
       .withColumn("value_int", codecs.be_int4_decode(col("value")))
-
-  /** Records whose value failed to decode → deserialization DLT: raw
-    * bytes pass through untouched + diagnostic header
-    * (reference contract SURVEY.md §2.3-5). */
-  def deserFailures(decoded: DataFrame): DataFrame =
-    withErrorHeader(
-      decoded.filter(col("value").isNotNull && col("value_int").isNull),
-      lit(IntegerDeserError))
-      .select(col("key"), col("value"), col("headers"))
-
-  /** Records that decoded (or were null tombstones, which Kafka's
-    * IntegerDeserializer passes through as null without error). */
-  def decodeOk(decoded: DataFrame): DataFrame =
-    decoded.filter(col("value").isNull || col("value_int").isNotNull)
 
   // ---------------------------------------------------------------------
   // Stage #2/#3 — wrapping mapper (Integer n -> random [a-z] string of
@@ -125,71 +117,17 @@ object ErrorChannel {
   /** `hasError` predicate (reference: MessageWrapper.java:5-7). */
   def hasError: Column = col("wrapper.error").isNotNull
 
-  /** Error branch (reference: ErrorHandlingTopology.java:32-37). */
-  def errorBranch(mapped: DataFrame): DataFrame = mapped.filter(hasError)
-
-  /** Default branch (reference: ErrorHandlingTopology.java:42-44). */
-  def okBranch(mapped: DataFrame): DataFrame = mapped.filter(!hasError)
-
-  // ---------------------------------------------------------------------
-  // Stage #6 — header-enriching unwrap on the error branch
-  // ---------------------------------------------------------------------
-
-  /** Render the error into an `error.message` header, swap the value
-    * back to the ORIGINAL input (re-encoded as 4-byte big-endian int,
-    * matching `Produced.with(String(), Integer())`), key untouched
-    * (reference: ErrorMessageMapper.java:21-38 + ErrorHandlingTopology.java:38). */
-  def toProcessDlt(errors: DataFrame): DataFrame =
-    withErrorHeader(errors, col("wrapper.error"))
-      .select(
-        col("key"),
-        codecs.be_int4_encode(col("wrapper.originalValue")).as("value"),
-        col("headers"))
-
-  // ---------------------------------------------------------------------
-  // Stage #7/#8 — unwrap mapped value, encode for the output topic
-  // ---------------------------------------------------------------------
-
-  /** Success path: value := mappedValue as UTF-8 bytes
-    * (reference: ErrorHandlingTopology.java:43-44). Headers pass
-    * through if present. */
-  def toOutput(ok: DataFrame): DataFrame = {
-    val base = Seq(col("key"), col("wrapper.mappedValue").cast(BinaryType).as("value"))
-    val cols =
-      if (ok.columns.contains("headers")) base :+ col("headers") else base
-    ok.select(cols: _*)
-  }
-
   // ---------------------------------------------------------------------
   // Stage #11 — pre-sink size guard (production-DLT routing)
   // ---------------------------------------------------------------------
 
   /** Estimated serialized record size (key + value + framing), matching
     * the reference's measured 2,000,091 bytes for a 2,000,000-char value
-    * under key "key". */
-  def recordSize(df: DataFrame): Column =
-    coalesce(octet_length(col("value")), lit(0)) +
-      coalesce(octet_length(col("key")), lit(0)) + lit(RecordOverheadBytes)
-
-  /** Records that fit under `maxRequestSize`. */
-  def sizeOk(outRecords: DataFrame, maxRequestSize: Int = DefaultMaxRequestSize): DataFrame =
-    outRecords.filter(recordSize(outRecords) <= maxRequestSize)
-
-  /** Oversized records → production DLT with the value EMPTIED so the
-    * DLT record itself fits, plus the producer's size message
-    * (reference: DeadLetterProductionExceptionHandler.java:26-45,59-67;
-    * Spark's Kafka sink has no per-record failure callback, so the
-    * reference's producer hook becomes this pre-emptive guard —
-    * SURVEY.md §2.1 #11). */
-  def toProductionDlt(outRecords: DataFrame,
-                      maxRequestSize: Int = DefaultMaxRequestSize): DataFrame = {
-    val oversized = outRecords.filter(recordSize(outRecords) > maxRequestSize)
-    val msg = concat(
-      lit("The message is "), recordSize(oversized).cast(StringType),
-      lit(" bytes when serialized which is larger than "),
-      lit(maxRequestSize.toString),
-      lit(", which is the value of the max.request.size configuration."))
-    withErrorHeader(oversized, msg)
-      .select(col("key"), lit(Array.empty[Byte]).as("value"), col("headers"))
-  }
+    * under key "key". Spark's Kafka sink has no per-record failure
+    * callback, so the reference's producer hook
+    * (DeadLetterProductionExceptionHandler.java:26-45,59-67) becomes a
+    * pre-emptive guard on this size (SURVEY.md §2.1 #11). */
+  def recordSize(key: Column, value: Column): Column =
+    coalesce(octet_length(value), lit(0)) +
+      coalesce(octet_length(key), lit(0)) + lit(RecordOverheadBytes)
 }

@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.codecs
 
 /** Whole-topology assembly: Kafka-shaped records in, four sink-ready
   * DataFrames out (reference dataflow, SURVEY.md §2.1):
@@ -13,11 +16,22 @@ import org.apache.spark.sql.functions._
   *                                                                └─ big  → productionDlt
   * }}}
   *
-  * The four results share one lineage prefix; callers that materialize
-  * more than one should persist the source batch first (see
-  * `graft.streaming.StreamingTopology`) so the scan runs once.
+  * The whole diagram is one narrow projection, [[route]]: each record
+  * leaves it sink-shaped (`key`, `value`, `headers`) with a `branch`
+  * label, the mapper and the size guard evaluated once per record. The
+  * four sinks are then label filters over the routed frame
+  * ([[branchesOf]]). A caller that materializes more than one branch
+  * persists the ROUTED frame (see `graft.streaming.StreamingTopology`),
+  * so the scan, the decode and the mapper run once per batch, and each
+  * branch reads the cache.
   */
 object ErrorHandlingTopology {
+
+  /** Branch labels, one per sink (the reference's topic names). */
+  val Output = "output"
+  val ProcessDlt = "process-exception.DLT"
+  val DeserializationDlt = "deserialization-exception.DLT"
+  val ProductionDlt = "production-exception.DLT"
 
   /** The four sink-ready record sets of one pass over the input. */
   final case class Branches(
@@ -29,39 +43,71 @@ object ErrorHandlingTopology {
   /** Full pipeline over a batch (or foreachBatch micro-batch) of
     * Kafka-shaped records `(key binary, value binary[, headers])`. */
   def apply(records: DataFrame,
-            maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): Branches = {
-    val decoded = ErrorChannel.safeDecode(records)
-    val deserDlt = ErrorChannel.deserFailures(decoded)
-    val mapped = ErrorChannel.wrapMap(ErrorChannel.decodeOk(decoded))
-    val processDlt = ErrorChannel.toProcessDlt(ErrorChannel.errorBranch(mapped))
-    val outAll = ErrorChannel.toOutput(ErrorChannel.okBranch(mapped))
-    val output = ErrorChannel.sizeOk(outAll, maxRequestSize)
-    val productionDlt = ErrorChannel.toProductionDlt(outAll, maxRequestSize)
-    Branches(output, processDlt, deserDlt, productionDlt)
+            maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): Branches =
+    branchesOf(route(records, maxRequestSize), records.columns.contains("headers"))
+
+  /** The one routing definition. Every record comes out sink-shaped for
+    * its branch, with `branch` naming it:
+    *  - deserialization DLT: undecodable value, raw bytes kept;
+    *  - process DLT: mapper error, the ORIGINAL int re-encoded
+    *    big-endian (`Produced.with(String(), Integer())`,
+    *    reference: ErrorMessageMapper.java:21-38);
+    *  - production DLT: output-shaped record over `maxRequestSize`,
+    *    value EMPTIED so the DLT record itself fits
+    *    (reference: DeadLetterProductionExceptionHandler.java:59-67);
+    *  - output: value := mapped string as UTF-8 bytes; tombstones (NULL
+    *    value) stay NULL (reference: ErrorHandlingTopology.java:43-44).
+    * DLT records get an `error.message` header appended to any existing
+    * headers; output records keep the input's `headers` (NULL when the
+    * input has none). Keys are never altered. */
+  def route(records: DataFrame,
+            maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): DataFrame = {
+    val mapped = ErrorChannel.wrapMap(ErrorChannel.safeDecode(records))
+      .withColumn("mapped", col("wrapper.mappedValue").cast(BinaryType))
+      .withColumn("size", ErrorChannel.recordSize(col("key"), col("mapped")))
+      .withColumn("branch",
+        when(col("value").isNotNull && col("value_int").isNull, DeserializationDlt)
+          .when(ErrorChannel.hasError, ProcessDlt)
+          .when(col("size") > maxRequestSize, ProductionDlt)
+          .otherwise(Output))
+    def is(label: String) = col("branch") === label
+    val existing =
+      if (records.columns.contains("headers")) col("headers")
+      else lit(null).cast(ErrorChannel.HeaderType)
+    val message =
+      when(is(DeserializationDlt), lit(ErrorChannel.IntegerDeserError))
+        .when(is(ProcessDlt), col("wrapper.error"))
+        .otherwise(concat(
+          lit("The message is "), col("size").cast(StringType),
+          lit(" bytes when serialized which is larger than "),
+          lit(maxRequestSize.toString),
+          lit(", which is the value of the max.request.size configuration.")))
+    mapped.select(
+      col("key"),
+      when(is(Output), col("mapped"))
+        .when(is(ProcessDlt), codecs.be_int4_encode(col("wrapper.originalValue")))
+        .when(is(ProductionDlt), lit(Array.empty[Byte]))
+        .otherwise(col("value")).as("value"),
+      when(is(Output), existing)
+        .otherwise(ErrorChannel.appendErrorHeader(existing, message)).as("headers"),
+      col("branch"))
   }
 
-  /** One-pass branch bookkeeping: label every record with the branch
-    * [[apply]] would route it to, using the SAME stage predicates, but
-    * as a single narrow map stage — branch statistics over 100 TB are
-    * then one scan + a |branches|-row aggregate instead of four scans
-    * over the same lineage prefix. (The multi-SINK fan-out keeps using
-    * [[apply]] behind a persist — StreamingTopology.processBatch; this
-    * is the monitoring/accounting path.) Split totality — every record
-    * gets exactly one label — is asserted in ErrorHandlingTopologySpec. */
-  def branchTag(records: DataFrame,
-                maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): DataFrame = {
-    val mapped = ErrorChannel.wrapMap(ErrorChannel.safeDecode(records))
-    // Size guard applies to the OUTPUT-shaped record (value = mapped
-    // string as UTF-8 bytes) — same expression as toOutput + recordSize.
-    val outSize =
-      coalesce(octet_length(col("wrapper.mappedValue").cast("binary")), lit(0)) +
-        coalesce(octet_length(col("key")), lit(0)) +
-        lit(ErrorChannel.RecordOverheadBytes)
-    mapped.withColumn("branch",
-      when(col("value").isNotNull && col("value_int").isNull,
-        "deserialization-exception.DLT")
-        .when(ErrorChannel.hasError, "process-exception.DLT")
-        .when(outSize > maxRequestSize, "production-exception.DLT")
-        .otherwise("output"))
+  /** The four sink frames of a [[route]]d frame: one label filter each.
+    * The output branch carries `headers` only when the input did. */
+  def branchesOf(routed: DataFrame, outputHeaders: Boolean): Branches = {
+    def branch(label: String, headers: Boolean = true): DataFrame =
+      routed.filter(col("branch") === label)
+        .select(Seq(col("key"), col("value")) ++ (if (headers) Seq(col("headers")) else Nil): _*)
+    Branches(branch(Output, outputHeaders), branch(ProcessDlt), branch(DeserializationDlt),
+      branch(ProductionDlt))
   }
+
+  /** One-pass branch bookkeeping: each record's key and the branch
+    * [[route]] sends it to. Branch statistics are then one scan plus a
+    * |branches|-row aggregate instead of four scans over the same
+    * lineage prefix (the flagship entry's accounting path). */
+  def branchTag(records: DataFrame,
+                maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): DataFrame =
+    route(records, maxRequestSize).select(col("key"), col("branch"))
 }

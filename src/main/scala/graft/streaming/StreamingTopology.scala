@@ -12,10 +12,14 @@ import graft.operators.{ErrorChannel, ErrorHandlingTopology}
   * inside one task (reference: .../topology/ErrorHandlingTopology.java:32-44).
   * Structured Streaming allows one sink per query, so the faithful
   * single-read fan-out is `foreachBatch` + `persist()` + one write per
-  * branch (SURVEY.md §2.1 #4): the micro-batch is read once, cached,
-  * and all four branches filter the cached batch. All four writes share
-  * one epoch — failure of any write fails the batch and replays it,
-  * preserving the reference's at-least-once semantics
+  * branch (SURVEY.md §2.1 #4): the micro-batch is routed once
+  * (`ErrorHandlingTopology.route`: decode, mapper and size guard, one
+  * narrow projection), the routed sink-shaped records are cached, and
+  * the four branches are label filters over that cache. The routed
+  * frame is a pure function of the batch, so a replay recomputes the
+  * same bytes (the D-Streams recompute-from-source argument). All four
+  * writes share one epoch — failure of any write fails the batch and
+  * replays it, preserving the reference's at-least-once semantics
   * (reference: README.md:31).
   */
 object StreamingTopology {
@@ -31,14 +35,15 @@ object StreamingTopology {
   /** Run one micro-batch (also directly usable in batch tests). */
   def processBatch(batch: DataFrame, sinks: Sinks,
                    maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): Unit = {
-    batch.persist(StorageLevel.MEMORY_AND_DISK)
+    val routed = ErrorHandlingTopology.route(batch, maxRequestSize)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val b = ErrorHandlingTopology(batch, maxRequestSize)
+      val b = ErrorHandlingTopology.branchesOf(routed, batch.columns.contains("headers"))
       sinks.deserializationDlt(b.deserializationDlt)
       sinks.processDlt(b.processDlt)
       sinks.output(b.output)
       sinks.productionDlt(b.productionDlt)
-    } finally batch.unpersist()
+    } finally routed.unpersist()
   }
 
   /** Start the streaming query over a streaming Kafka-shaped DataFrame. */

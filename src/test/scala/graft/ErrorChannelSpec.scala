@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{ErrorChannel, ErrorHandlingTopology}
+import graft.streaming.StreamingTopology
 
 /** The reference's observable behavioral contract (SURVEY.md §2.3,
   * FIXTURES.md §1) replayed through the batch topology — the analog of
@@ -132,5 +133,66 @@ class ErrorChannelSpec extends AnyFunSuite {
     val dlt = ErrorHandlingTopology(base).processDlt.collect()
     val hs = headerMap(dlt(0))
     assert(hs("trace") == "t1" && hs(ErrorChannel.ErrorHeaderKey).nonEmpty)
+  }
+
+  test("route-derived branches equal the stage composition byte for byte") {
+    import org.apache.spark.sql.functions._
+    val max = 400
+    val rng = new scala.util.Random(20261018L)
+    // value sizes exactly at the limit and one past it: the output-shaped
+    // record is key + n mapped bytes + framing
+    def fitting(key: String) = max - key.length - ErrorChannel.RecordOverheadBytes
+    val rows: Seq[(String, Array[Byte])] = (0 until 400).map { i =>
+      val k = s"r$i"
+      k -> (rng.nextInt(10) match {
+        case 0 => beInt(-(1 + rng.nextInt(1000)))                  // process DLT
+        case 1 => Array.fill(Seq(0, 1, 2, 3, 5, 7)(rng.nextInt(6)))(
+          rng.nextInt(256).toByte)                                  // undecodable
+        case 2 => null                                              // tombstone
+        case 3 => beInt(fitting(k) + rng.nextInt(3) - 1)            // around the limit
+        case 4 => beInt(max + rng.nextInt(2000))                    // oversized
+        case _ => beInt(rng.nextInt(300))                           // valid
+      })
+    } ++ Seq("edge" -> beInt(fitting("edge")), "edge1" -> beInt(fitting("edge1") + 1))
+    // repartitioned: a local relation would be folded at planning, and
+    // the codegen'd path would go untested
+    val plain = records(rows: _*).repartition(3)
+    val header = struct(lit("trace").as("key"), encode(col("key").cast("string"), "UTF-8")
+      .as("value"))
+    val withHeaders = plain.withColumn("headers",
+      when(pmod(xxhash64(col("key")), lit(3L)) === 0, lit(null).cast(ErrorChannel.HeaderType))
+        .when(pmod(xxhash64(col("key")), lit(3L)) === 1, array().cast(ErrorChannel.HeaderType))
+        .otherwise(array(header, header)))
+
+    def render(rows: Seq[Row]): Seq[String] = rows.map(ErrorChannelStages.render).sorted
+    def sinks(into: collection.mutable.Map[String, Seq[Row]]) = {
+      def sink(name: String): DataFrame => Unit = df => into(name) = df.collect().toSeq
+      StreamingTopology.Sinks(sink("output"), sink("process"), sink("deser"), sink("production"))
+    }
+    def named(b: ErrorHandlingTopology.Branches): Map[String, DataFrame] =
+      Map("output" -> b.output, "process" -> b.processDlt,
+        "deser" -> b.deserializationDlt, "production" -> b.productionDlt)
+
+    Seq(plain, withHeaders).foreach { input =>
+      val spec = named(ErrorChannelStages.branches(input, max))
+      val routed = named(ErrorHandlingTopology(input, max))
+      val fanned = collection.mutable.Map[String, Seq[Row]]()
+      StreamingTopology.processBatch(input, sinks(fanned), max)
+      spec.foreach { case (name, want) =>
+        val expected = render(want.collect().toSeq)
+        assert(routed(name).columns.toSeq == want.columns.toSeq, name)
+        assert(render(routed(name).collect().toSeq) == expected, s"$name via apply")
+        assert(render(fanned(name)) == expected, s"$name via processBatch")
+      }
+      val counts = spec.map { case (n, df) => n -> df.count() }
+      assert(counts.values.sum == rows.length && counts.values.forall(_ > 0), counts)
+    }
+    // the boundary pair splits across the guard
+    val b = ErrorChannelStages.branches(plain, max)
+    def keys(df: DataFrame) = df.select(col("key").cast("string")).collect().map(_.getString(0))
+    assert(keys(b.output).contains("edge") && keys(b.productionDlt).contains("edge1"))
+    // tombstones route to output with a NULL value
+    assert(b.output.filter(col("value").isNull).count() ==
+      rows.count(_._2 == null))
   }
 }

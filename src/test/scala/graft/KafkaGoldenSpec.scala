@@ -83,12 +83,12 @@ class KafkaGoldenSpec extends AnyFunSuite {
         .select(col("key"), codecs.be_int4_encode(col("n")).as("value")),
       lit("java.lang.IllegalArgumentException: -1"))
     // 3. deserialization error ("key", "10" as raw bytes)
-    val deserDlt = ErrorChannel.deserFailures(
+    val deserDlt = ErrorChannelStages.deserFailures(
       ErrorChannel.safeDecode(
         Seq(("key".getBytes("UTF-8"), "10".getBytes("UTF-8")))
           .toDF("key", "value")))
     // 4. production error -> EMPTY value + size-guard header
-    val prodDlt = ErrorChannel.toProductionDlt(
+    val prodDlt = ErrorChannelStages.toProductionDlt(
       Seq(("key".getBytes("UTF-8"), Array.fill[Byte](2000000)(97)))
         .toDF("key", "value"))
 
@@ -99,5 +99,34 @@ class KafkaGoldenSpec extends AnyFunSuite {
       KafkaEdge.toSinkShape(prodDlt, "production-exception.DLT"))
       .flatMap(_.collect().map(render))
     check("sink_records.golden", lines.mkString("", "\n", "\n"))
+  }
+
+  test("the four canonical records through StreamingTopology.processBatch " +
+    "match the golden DLT lines") {
+    import graft.streaming.StreamingTopology
+    def beInt(n: Int) = java.nio.ByteBuffer.allocate(4).putInt(n).array()
+    val input = Seq[Array[Byte]](beInt(2), beInt(-1), "10".getBytes("UTF-8"), beInt(2000000))
+      .map("key".getBytes("UTF-8") -> _).toDF("key", "value")
+    val got = collection.mutable.Map[String, Seq[Row]]()
+    def sink(topic: String): org.apache.spark.sql.DataFrame => Unit =
+      df => got(topic) = KafkaEdge.toSinkShape(df, topic).collect().toSeq
+    StreamingTopology.processBatch(input, StreamingTopology.Sinks(
+      output = sink("output"),
+      processDlt = sink("process-exception.DLT"),
+      deserializationDlt = sink("deserialization-exception.DLT"),
+      productionDlt = sink("production-exception.DLT")))
+
+    // the DLT lines are exactly the golden ones; the output value is
+    // random content, so only its contract is checked
+    val golden = new String(Files.readAllBytes(dir.resolve("sink_records.golden")), "UTF-8")
+      .split("\n").toSeq
+    val dlt = Seq("process-exception.DLT", "deserialization-exception.DLT",
+      "production-exception.DLT").flatMap(t => got(t).map(render))
+    assert(dlt == golden.filterNot(_.startsWith("output|")))
+    val out = got("output")
+    assert(out.length == 1)
+    assert(out.head.getAs[Array[Byte]]("key").toSeq == "key".getBytes("UTF-8").toSeq)
+    val value = new String(out.head.getAs[Array[Byte]]("value"), "UTF-8")
+    assert(value.length == 2 && value.forall(c => c >= 'a' && c <= 'z'), value)
   }
 }

@@ -109,6 +109,43 @@ class PlanAuditSpec extends AnyFunSuite {
     assert("Scan parquet".r.findAllIn(p).size == 1, s"entry scans:\n$p")
   }
 
+  test("dead-letter fan-out: route runs the mapper once; each branch " +
+    "processBatch builds reads the routed cache, with no decode or mapper") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions._
+    import graft.functions.{BigEndianInt4Decode, RandLowercase, codecs}
+    import graft.operators.ErrorHandlingTopology
+    import graft.streaming.StreamingTopology
+    // a non-local source, so no projection is folded away at planning
+    val records = spark.range(0L, 2000L, 1L, 2).select(
+      col("id").cast("string").cast("binary").as("key"),
+      when(col("id") % 7 === 0, lit("bad".getBytes("UTF-8")))
+        .otherwise(codecs.be_int4_encode((col("id") % 300 - 20).cast("int"))).as("value"))
+    def count(p: LogicalPlan, pick: PartialFunction[Expression, Any]): Int =
+      p.flatMap(_.expressions).map(_.collect(pick).size).sum
+    val routed = ErrorHandlingTopology.route(records).queryExecution.optimizedPlan
+    assert(count(routed, { case r: RandLowercase => r }) == 1, s"route:\n$routed")
+
+    val plans = scala.collection.mutable.Map[String, LogicalPlan]()
+    def sink(name: String): DataFrame => Unit = { df =>
+      plans(name) = df.queryExecution.optimizedPlan
+      df.collect()
+    }
+    StreamingTopology.processBatch(records, StreamingTopology.Sinks(
+      sink("output"), sink("process"), sink("deser"), sink("production")))
+    assert(plans.keySet == Set("output", "process", "deser", "production"))
+    plans.foreach { case (name, p) =>
+      // collect/flatMap do not descend into InMemoryRelation's cached plan
+      assert(p.collectFirst { case r: InMemoryRelation => r }.isDefined,
+        s"$name does not read the routed cache:\n$p")
+      assert(count(p, { case e: RandLowercase => e; case e: BigEndianInt4Decode => e }) == 0,
+        s"$name re-derives the route:\n$p")
+    }
+  }
+
   test("sim_knn_lsh broadcasts ONLY query-filtered sides (r4 finding: " +
     "the re-score join broadcast the unfiltered corpus)") {
     // AQE's executedPlan wraps the tree in a leaf AdaptiveSparkPlanExec

@@ -54,14 +54,109 @@ class StreamingTopologySpec extends AnyFunSuite {
     assert(collected("prodDlt").head.getAs[Array[Byte]]("value").isEmpty)
   }
 
+  test("a DLT sink that throws on epoch N terminates the query with that cause; " +
+    "a restart on the checkpoint redelivers epoch N byte-identically to all four sinks") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    import graft.operators.ErrorHandlingTopology
+    implicit val sqlCtx = spark.sqlContext
+    val max = 200
+    val failEpoch = 1L
+    val boom = new IllegalStateException("production DLT unavailable")
+    def epochData(e: Int): Seq[(Array[Byte], Array[Byte])] = (0 until 12).map { i =>
+      s"e$e-$i".getBytes("UTF-8") -> (i % 4 match {
+        case 0 => beInt(i)
+        case 1 => beInt(-i)
+        case 2 => "x".getBytes("UTF-8")
+        case _ => beInt(max + i) // over the size guard
+      })
+    }
+    def render(df: DataFrame): Seq[String] = df.collect().map(ErrorChannelStages.render).toSeq.sorted
+    // (run, epoch, sink) -> rendered records
+    val seen = scala.collection.mutable.Map[(Int, Long, String), Seq[String]]()
+    var run = 1
+    var routedPlan: Option[LogicalPlan] = None
+    def sink(name: String): DataFrame => Unit = { df =>
+      val epoch = spark.sparkContext.getLocalProperty(MicroBatchExecution.BATCH_ID_KEY).toLong
+      val rows = render(df)
+      seen.synchronized { seen((run, epoch, name)) = rows }
+      if (run == 1 && epoch == failEpoch && name == "production") {
+        // the branch reads the routed cache; remember which plan that is
+        val qe = df.queryExecution
+        val cm = qe.sparkSession.sharedState.cacheManager
+        routedPlan = qe.analyzed.collectFirst {
+          case p if cm.lookupCachedData(qe.sparkSession, p).isDefined => p
+        }
+        throw boom
+      }
+    }
+    val sinks = StreamingTopology.Sinks(output = sink("output"), processDlt = sink("process"),
+      deserializationDlt = sink("deser"), productionDlt = sink("production"))
+    val input = MemoryStream[(Array[Byte], Array[Byte])]
+    val cp = java.nio.file.Files.createTempDirectory("graft-dlt-fail-cp").toString
+    def start() = StreamingTopology.start(input.toDF().toDF("key", "value"), sinks, cp,
+      maxRequestSize = max, trigger = Trigger.ProcessingTime(0L))
+
+    // run 1: epoch 0 commits, epoch 1 dies in the production DLT sink
+    val q1 = start()
+    try {
+      input.addData(epochData(0))
+      q1.processAllAvailable()
+      input.addData(epochData(1))
+      intercept[StreamingQueryException](q1.awaitTermination(120000L))
+    } finally q1.stop()
+    assert(!q1.isActive)
+    val causes = Iterator.iterate[Throwable](q1.exception.get)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_ eq boom), s"terminated by ${q1.exception}")
+    assert(routedPlan.isDefined, "the failing sink read no cached routed frame")
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(classic.sharedState.cacheManager.lookupCachedData(classic, routedPlan.get).isEmpty,
+      "routed frame still cached after the failed epoch")
+
+    // run 2 on the same checkpoint: epoch 1 is replayed, then epoch 2 runs
+    run = 2
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      input.addData(epochData(2))
+      q2.processAllAvailable()
+    } finally q2.stop()
+
+    val names = Seq("deser", "process", "output", "production")
+    names.foreach { n =>
+      assert(seen.contains((1, 0L, n)) && seen.contains((2, failEpoch, n)) &&
+        seen.contains((2, 2L, n)), s"$n deliveries: ${seen.keys.toSeq.sorted}")
+      assert(!seen.contains((2, 0L, n)), s"committed epoch 0 replayed to $n")
+    }
+    // the sinks before the failing one saw epoch 1 twice, byte for byte
+    names.init.foreach(n => assert(seen((1, failEpoch, n)) == seen((2, failEpoch, n)), n))
+    // every replayed branch equals a batch recompute of epoch 1's input
+    val recompute = ErrorHandlingTopology(
+      epochData(failEpoch.toInt).toDF("key", "value"), max)
+    Seq("output" -> recompute.output, "process" -> recompute.processDlt,
+      "deser" -> recompute.deserializationDlt, "production" -> recompute.productionDlt)
+      .foreach { case (n, df) =>
+        assert(seen((2, failEpoch, n)) == render(df), n)
+      }
+    // no input record is lost; only epoch 1's records are delivered twice
+    val delivered = seen.values.toSeq.flatten.map(_.takeWhile(_ != '|'))
+    def inputKeys(e: Int) = epochData(e).map(_._1.map("%02x".format(_)).mkString)
+    assert(delivered.toSet == (0 to 2).flatMap(inputKeys).toSet)
+    val twice = delivered.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
+    assert(twice.nonEmpty && twice.toSet.subsetOf(inputKeys(failEpoch.toInt).toSet), twice)
+  }
+
   test("kill/resume from checkpoint: no re-emission, dedup state survives " +
     "the restart, data that arrived while down is processed exactly once (r11)") {
     // The reference's uncaught-exception contract is SHUTDOWN_APPLICATION
     // precisely so a clean restart resumes WITHOUT duplicates
-    // (UncaughtExceptionHandlerConfig.java:19, README.md:31). Shutdown
-    // .scala pins terminate-on-failure; this pins the other half —
-    // resume-from-checkpoint with restored source offsets AND restored
-    // dropDuplicatesWithinWatermark state.
+    // (UncaughtExceptionHandlerConfig.java:19, README.md:31). The
+    // failing-DLT-sink test above pins terminate-on-failure and replay
+    // of the failed epoch (the session stop in Shutdown.awaitOrShutdown
+    // is not exercised: it would stop the shared test session); this
+    // pins the other half — resume-from-checkpoint with restored source
+    // offsets AND restored dropDuplicatesWithinWatermark state.
     import java.sql.Timestamp
     import org.apache.spark.sql.streaming.OutputMode
     import graft.streaming.StreamingCuration
