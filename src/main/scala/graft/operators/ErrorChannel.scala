@@ -92,15 +92,17 @@ object ErrorChannel {
     * (asserted at ErrorHandlingTopologyTest.java:58). The generator is
     * seeded per row (key ⊕ value) so task retries are deterministic —
     * mandatory at cluster scale, where speculative/retried tasks must
-    * not fork the data. */
-  def wrapMap(decoded: DataFrame): DataFrame = {
+    * not fork the data. A caller that will not emit the mapped string
+    * (an oversized record) passes `generate` false and gets a NULL
+    * `mappedValue` without building it. */
+  def wrapMap(decoded: DataFrame, generate: Column = lit(true)): DataFrame = {
     val n = col("value_int")
     val seed = xxhash64(col("key"), n)
     decoded.withColumn("wrapper",
       when(n >= 0,
         struct(
           n.as("originalValue"),
-          codecs.rand_lowercase(seed, n).as("mappedValue"),
+          when(generate, codecs.rand_lowercase(seed, n)).as("mappedValue"),
           lit(null).cast(StringType).as("error")))
       .otherwise(
         struct(
@@ -121,13 +123,15 @@ object ErrorChannel {
   // Stage #11 — pre-sink size guard (production-DLT routing)
   // ---------------------------------------------------------------------
 
-  /** Estimated serialized record size (key + value + framing), matching
+  /** Estimated serialized record size (key + value + framing) of a
+    * record whose value is `valueBytes` long (NULL: no value), matching
     * the reference's measured 2,000,091 bytes for a 2,000,000-char value
-    * under key "key". Spark's Kafka sink has no per-record failure
-    * callback, so the reference's producer hook
+    * under key "key". Long arithmetic: a value near 2^31 bytes plus its
+    * framing overflows an int. Spark's Kafka sink has no per-record
+    * failure callback, so the reference's producer hook
     * (DeadLetterProductionExceptionHandler.java:26-45,59-67) becomes a
     * pre-emptive guard on this size (SURVEY.md §2.1 #11). */
-  def recordSize(key: Column, value: Column): Column =
-    coalesce(octet_length(value), lit(0)) +
+  def recordSize(key: Column, valueBytes: Column): Column =
+    coalesce(valueBytes.cast(LongType), lit(0L)) +
       coalesce(octet_length(key), lit(0)) + lit(RecordOverheadBytes)
 }

@@ -62,9 +62,12 @@ object ErrorHandlingTopology {
     * input has none). Keys are never altered. */
   def route(records: DataFrame,
             maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): DataFrame = {
-    val mapped = ErrorChannel.wrapMap(ErrorChannel.safeDecode(records))
+    // the mapped string is n one-byte [a-z] chars, so the size guard is
+    // decided from n, and only a record that fits has its string built
+    val sized = ErrorChannel.safeDecode(records)
+      .withColumn("size", ErrorChannel.recordSize(col("key"), col("value_int")))
+    val mapped = ErrorChannel.wrapMap(sized, generate = col("size") <= maxRequestSize)
       .withColumn("mapped", col("wrapper.mappedValue").cast(BinaryType))
-      .withColumn("size", ErrorChannel.recordSize(col("key"), col("mapped")))
       .withColumn("branch",
         when(col("value").isNotNull && col("value_int").isNull, DeserializationDlt)
           .when(ErrorChannel.hasError, ProcessDlt)

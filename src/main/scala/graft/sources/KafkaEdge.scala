@@ -125,7 +125,9 @@ object KafkaEdge {
   /** Production wiring: the four-branch sink set of the dead-letter
     * topology (graft.streaming.StreamingTopology.Sinks), each branch
     * writing its topic (reference topology: output +
-    * process/deserialization/production DLTs). */
+    * process/deserialization/production DLTs). The four are independent
+    * `writeBatch` calls sharing no state, so they are safe to run
+    * concurrently, as `processBatch` runs them. */
   def sinks(bootstrap: String, topics: TopicConfig,
             maxRequestSize: Int = 1048576): graft.streaming.StreamingTopology.Sinks =
     graft.streaming.StreamingTopology.Sinks(

@@ -77,6 +77,24 @@ class ErrorChannelSpec extends AnyFunSuite {
     assert(msg.contains("larger than 1048576"))
   }
 
+  test("the size guard is decided from n: values decoding near 2^31 route to the " +
+    "production DLT without building their mapped string") {
+    // any 4-byte value decodes: ASCII "1000" is n = 825,241,648, and an
+    // n near 2^31 is past the JVM's array limit
+    val ascii = "1000".getBytes("UTF-8")
+    val n = Seq(java.nio.ByteBuffer.wrap(ascii).getInt, Int.MaxValue)
+    assert(n.head == 825241648)
+    val t0 = System.nanoTime()
+    val dlt = run("key" -> ascii, "key" -> beInt(Int.MaxValue)).productionDlt.collect()
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(seconds < 30, s"routing two records took $seconds s")
+    val size = n.map(_.toLong + "key".length + ErrorChannel.RecordOverheadBytes)
+    assert(dlt.map(headerMap(_)(ErrorChannel.ErrorHeaderKey)).toSeq.sorted == size.map(s =>
+      s"The message is $s bytes when serialized which is larger than 1048576, " +
+        "which is the value of the max.request.size configuration.").sorted)
+    assert(dlt.forall(_.getAs[Array[Byte]]("value").isEmpty))
+  }
+
   test("routing totality: every record lands in exactly one branch") {
     // FIXTURES.md §2 — n in [-50, 50] plus undecodable payloads
     val rows = (-50 to 50).map(n => s"k$n" -> beInt(n)) ++
@@ -176,7 +194,7 @@ class ErrorChannelSpec extends AnyFunSuite {
     Seq(plain, withHeaders).foreach { input =>
       val spec = named(ErrorChannelStages.branches(input, max))
       val routed = named(ErrorHandlingTopology(input, max))
-      val fanned = collection.mutable.Map[String, Seq[Row]]()
+      val fanned = collection.concurrent.TrieMap[String, Seq[Row]]()
       StreamingTopology.processBatch(input, sinks(fanned), max)
       spec.foreach { case (name, want) =>
         val expected = render(want.collect().toSeq)

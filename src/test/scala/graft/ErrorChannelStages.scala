@@ -78,7 +78,7 @@ object ErrorChannelStages {
   }
 
   private def size: org.apache.spark.sql.Column =
-    ErrorChannel.recordSize(col("key"), col("value"))
+    ErrorChannel.recordSize(col("key"), octet_length(col("value")))
 
   /** Records that fit under `maxRequestSize`. */
   def sizeOk(outRecords: DataFrame, maxRequestSize: Int = DefaultMaxRequestSize): DataFrame =

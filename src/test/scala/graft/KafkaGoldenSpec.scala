@@ -107,7 +107,7 @@ class KafkaGoldenSpec extends AnyFunSuite {
     def beInt(n: Int) = java.nio.ByteBuffer.allocate(4).putInt(n).array()
     val input = Seq[Array[Byte]](beInt(2), beInt(-1), "10".getBytes("UTF-8"), beInt(2000000))
       .map("key".getBytes("UTF-8") -> _).toDF("key", "value")
-    val got = collection.mutable.Map[String, Seq[Row]]()
+    val got = collection.concurrent.TrieMap[String, Seq[Row]]()
     def sink(topic: String): org.apache.spark.sql.DataFrame => Unit =
       df => got(topic) = KafkaEdge.toSinkShape(df, topic).collect().toSeq
     StreamingTopology.processBatch(input, StreamingTopology.Sinks(

@@ -129,7 +129,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val routed = ErrorHandlingTopology.route(records).queryExecution.optimizedPlan
     assert(count(routed, { case r: RandLowercase => r }) == 1, s"route:\n$routed")
 
-    val plans = scala.collection.mutable.Map[String, LogicalPlan]()
+    val plans = scala.collection.concurrent.TrieMap[String, LogicalPlan]()
     def sink(name: String): DataFrame => Unit = { df =>
       plans(name) = df.queryExecution.optimizedPlan
       df.collect()

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +20,28 @@ class StreamingTopologySpec extends AnyFunSuite {
 
   private def beInt(n: Int): Array[Byte] =
     java.nio.ByteBuffer.allocate(4).putInt(n).array()
+
+  /** Twelve records keyed `<tag>-<i>`, three per branch under a
+    * `maxRequestSize` of [[Max]]. */
+  private val Max = 200
+  private def mix(tag: String): Seq[(Array[Byte], Array[Byte])] = (0 until 12).map { i =>
+    s"$tag-$i".getBytes("UTF-8") -> (i % 4 match {
+      case 0 => beInt(i)
+      case 1 => beInt(-i)
+      case 2 => "x".getBytes("UTF-8")
+      case _ => beInt(Max + i) // over the size guard
+    })
+  }
+
+  /** Whether `df` reads a frame the cache manager holds. */
+  private def readsCache(df: DataFrame): Boolean = {
+    val qe = df.queryExecution
+    val cm = qe.sparkSession.sharedState.cacheManager
+    qe.analyzed.find(p => cm.lookupCachedData(qe.sparkSession, p).isDefined).isDefined
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
 
   test("all four sinks receive their branches from a single streamed read") {
     implicit val sqlCtx = spark.sqlContext
@@ -61,17 +88,10 @@ class StreamingTopologySpec extends AnyFunSuite {
     import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
     import graft.operators.ErrorHandlingTopology
     implicit val sqlCtx = spark.sqlContext
-    val max = 200
+    val max = Max
     val failEpoch = 1L
     val boom = new IllegalStateException("production DLT unavailable")
-    def epochData(e: Int): Seq[(Array[Byte], Array[Byte])] = (0 until 12).map { i =>
-      s"e$e-$i".getBytes("UTF-8") -> (i % 4 match {
-        case 0 => beInt(i)
-        case 1 => beInt(-i)
-        case 2 => "x".getBytes("UTF-8")
-        case _ => beInt(max + i) // over the size guard
-      })
-    }
+    def epochData(e: Int): Seq[(Array[Byte], Array[Byte])] = mix(s"e$e")
     def render(df: DataFrame): Seq[String] = df.collect().map(ErrorChannelStages.render).toSeq.sorted
     // (run, epoch, sink) -> rendered records
     val seen = scala.collection.mutable.Map[(Int, Long, String), Seq[String]]()
@@ -107,8 +127,7 @@ class StreamingTopologySpec extends AnyFunSuite {
       intercept[StreamingQueryException](q1.awaitTermination(120000L))
     } finally q1.stop()
     assert(!q1.isActive)
-    val causes = Iterator.iterate[Throwable](q1.exception.get)(_.getCause).takeWhile(_ != null)
-    assert(causes.exists(_ eq boom), s"terminated by ${q1.exception}")
+    assert(causes(q1.exception.get).exists(_ eq boom), s"terminated by ${q1.exception}")
     assert(routedPlan.isDefined, "the failing sink read no cached routed frame")
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     assert(classic.sharedState.cacheManager.lookupCachedData(classic, routedPlan.get).isEmpty,
@@ -129,7 +148,8 @@ class StreamingTopologySpec extends AnyFunSuite {
         seen.contains((2, 2L, n)), s"$n deliveries: ${seen.keys.toSeq.sorted}")
       assert(!seen.contains((2, 0L, n)), s"committed epoch 0 replayed to $n")
     }
-    // the sinks before the failing one saw epoch 1 twice, byte for byte
+    // every other sink completed epoch 1 in run 1 too, and saw it again
+    // byte for byte
     names.init.foreach(n => assert(seen((1, failEpoch, n)) == seen((2, failEpoch, n)), n))
     // every replayed branch equals a batch recompute of epoch 1's input
     val recompute = ErrorHandlingTopology(
@@ -145,6 +165,115 @@ class StreamingTopologySpec extends AnyFunSuite {
     assert(delivered.toSet == (0 to 2).flatMap(inputKeys).toSet)
     val twice = delivered.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
     assert(twice.nonEmpty && twice.toSet.subsetOf(inputKeys(failEpoch.toInt).toSet), twice)
+  }
+
+  test("one batch's four sink calls are in flight together") {
+    val together = new CountDownLatch(4)
+    def sink: DataFrame => Unit = { df =>
+      together.countDown()
+      if (!together.await(30, TimeUnit.SECONDS))
+        throw new AssertionError("a sink call ran while another had not started")
+      df.collect()
+    }
+    StreamingTopology.processBatch(mix("b").toDF("key", "value"),
+      StreamingTopology.Sinks(sink, sink, sink, sink), Max)
+    assert(together.getCount == 0)
+  }
+
+  test("every sink call reads its own micro-batch id from the local properties") {
+    import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
+    import org.apache.spark.sql.streaming.Trigger
+    implicit val sqlCtx = spark.sqlContext
+    // (sink, batch id property, tags of the keys it received)
+    val seen = new ConcurrentLinkedQueue[(String, Option[String], Set[String])]()
+    def sink(name: String): DataFrame => Unit = { df =>
+      val batch = Option(spark.sparkContext.getLocalProperty(MicroBatchExecution.BATCH_ID_KEY))
+      val tags = df.collect().map(r => new String(r.getAs[Array[Byte]]("key"), "UTF-8")
+        .takeWhile(_ != '-')).toSet
+      seen.add((name, batch, tags))
+    }
+    val input = MemoryStream[(Array[Byte], Array[Byte])]
+    val cp = java.nio.file.Files.createTempDirectory("graft-batch-id-cp").toString
+    val q = StreamingTopology.start(input.toDF().toDF("key", "value"),
+      StreamingTopology.Sinks(sink("output"), sink("process"), sink("deser"), sink("production")),
+      cp, Max, Trigger.ProcessingTime(0L))
+    try (0 until 3).foreach { e =>
+      input.addData(mix(e.toString))
+      q.processAllAvailable()
+    } finally q.stop()
+    val calls = seen.asScala.toSeq
+    assert(calls.size == 12, calls)
+    calls.foreach { case (name, batch, tags) =>
+      assert(batch.isDefined && tags == Set(batch.get), s"$name read batch $batch for $tags")
+    }
+  }
+
+  test("two sinks throw: the batch fails with one of their exceptions, after every " +
+    "call has finished and while the routed frame was still cached") {
+    import org.apache.spark.SparkThrowable
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    implicit val sqlCtx = spark.sqlContext
+    val boomDeser = new IllegalStateException("deserialization DLT unavailable")
+    val boomProduction = new IllegalStateException("production DLT unavailable")
+    val running = new AtomicInteger()
+    val finished = new ConcurrentLinkedQueue[(String, Boolean)]()
+    def failing(boom: Throwable): DataFrame => Unit = _ => throw boom
+    def slow(name: String): DataFrame => Unit = { df =>
+      running.incrementAndGet()
+      try {
+        Thread.sleep(1500)
+        val cached = readsCache(df)
+        df.collect()
+        finished.add(name -> cached)
+      } finally running.decrementAndGet()
+    }
+    val input = MemoryStream[(Array[Byte], Array[Byte])]
+    input.addData(mix("f"))
+    val cp = java.nio.file.Files.createTempDirectory("graft-two-fail-cp").toString
+    val q = StreamingTopology.start(input.toDF().toDF("key", "value"),
+      StreamingTopology.Sinks(output = slow("output"), processDlt = slow("process"),
+        deserializationDlt = failing(boomDeser), productionDlt = failing(boomProduction)),
+      cp, Max)
+    try intercept[StreamingQueryException](q.awaitTermination(120000L))
+    finally q.stop()
+    assert(running.get == 0, "a sink call outlived the failed batch")
+    assert(finished.asScala.toMap == Map("output" -> true, "process" -> true),
+      "the slow calls must finish, reading the routed cache")
+    // below Spark's own wrappers, the sink's exception itself
+    val thrown = causes(q.exception.get).find(!_.isInstanceOf[SparkThrowable])
+    assert(thrown.exists(t => (t eq boomDeser) || (t eq boomProduction)),
+      s"terminated by ${causes(q.exception.get)}")
+  }
+
+  test("stop() during a batch cancels a sink's running Spark job through the " +
+    "query's job group") {
+    implicit val sqlCtx = spark.sqlContext
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val blocked: DataFrame => Unit = { df =>
+      try df.rdd.mapPartitions(StopProbe.block).count()
+      catch { case t: Throwable => outcome.set(t); throw t }
+    }
+    val quick: DataFrame => Unit = _.collect()
+    // the fan-out threads now exist, made outside any query: only the
+    // captured properties can give the query's sink calls its job group
+    StreamingTopology.processBatch(mix("w").toDF("key", "value"),
+      StreamingTopology.Sinks(quick, quick, quick, quick), Max)
+    val input = MemoryStream[(Array[Byte], Array[Byte])](1)
+    input.addData(mix("s"))
+    val cp = java.nio.file.Files.createTempDirectory("graft-stop-cp").toString
+    val q = StreamingTopology.start(input.toDF().toDF("key", "value"),
+      StreamingTopology.Sinks(output = blocked, processDlt = quick,
+        deserializationDlt = quick, productionDlt = quick), cp, Max)
+    val stopS = try {
+      assert(StopProbe.entered.await(60, TimeUnit.SECONDS), "the output job never started")
+      val t0 = System.nanoTime()
+      q.stop()
+      (System.nanoTime() - t0) / 1e9
+    } finally q.stop()
+    assert(stopS < 30, s"stop() took $stopS s")
+    assert(!q.isActive)
+    assert(outcome.get != null && outcome.get.getMessage.contains("cancel"),
+      s"the blocked job ended with ${outcome.get}")
   }
 
   test("kill/resume from checkpoint: no re-emission, dedup state survives " +
@@ -213,5 +342,17 @@ class StreamingTopologySpec extends AnyFunSuite {
     assert(seenBatches.toSeq == seenBatches.toSeq.sorted &&
       seenBatches.toSeq.distinct == seenBatches.toSeq,
       s"batch ids must continue, not replay: $seenBatches")
+  }
+}
+
+/** Task side of the stop() spec: local-mode tasks run in the test JVM. */
+object StopProbe {
+  val entered = new CountDownLatch(1)
+  /** Blocks the task until it is interrupted (a cancelled job's tasks
+    * are), or for 90 s. */
+  val block: Iterator[Row] => Iterator[Row] = { rows =>
+    entered.countDown()
+    Thread.sleep(90000L)
+    rows
   }
 }
