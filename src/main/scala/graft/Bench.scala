@@ -16,7 +16,7 @@ object Bench {
     * under the agg, which matches the operator contract: the ORDER BY
     * exists only for the oracle's row-hash compare, not the operator.)
     */
-  private def materialize(df: DataFrame): Unit = {
+  private[graft] def materialize(df: DataFrame): Unit = {
     // bit_xor, not sum: summing 64-bit hashes overflows under ANSI.
     val h = xxhash64(df.columns.map(col): _*)
     df.select(h.as("h")).agg(expr("bit_xor(h)")).collect()
@@ -28,9 +28,10 @@ object Bench {
     * iterative families) leave their blocks alive until the driver
     * GCs the plan references, so a long suite accumulates ~GBs of
     * dead storage and later checkpoints run against a full
-    * BlockManager (measured in tools/Scratch: dd_lsh_verified 1.0 s
-    * clean vs 2.4 s under 14 GB of live ballast — the r7 1.5→2.5 s
-    * "regression" was this harness artifact, not engine cost). Each
+    * BlockManager (measured r8, recorded in SURVEY.md's block-cleanup
+    * note: dd_lsh_verified 1.0 s clean vs 2.4 s under 14 GB of live
+    * ballast — the r7 1.5→2.5 s "regression" was this harness
+    * artifact, not engine cost). Each
     * production query is its own cluster job with its own executors,
     * so per-query cleanup is the faithful cost model, not a cheat.
     * Safe mid-suite: every timed sample rebuilds its plan from
@@ -42,7 +43,7 @@ object Bench {
     * cache across bench samples (each sample must rebuild from
     * scratch); a family that needs cross-run state belongs in its
     * own harness, not SparkEntry.queries. */
-  private def dropLeftoverBlocks(spark: SparkSession): Unit =
+  private[graft] def dropLeftoverBlocks(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
 
@@ -73,18 +74,62 @@ object Bench {
       .split(' ').head.toDouble
     catch { case _: Throwable => -1.0 }
 
+  /** A declared query: `(session, sfDir) => result`. */
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Bench's estimator over `queries`: one untimed warm-up pass over
+    * all of them, then `reps` timed round-robin passes, each sample
+    * being build + [[materialize]] followed by an untimed
+    * [[dropLeftoverBlocks]]. A query that throws in its warm-up or in
+    * any sample is failed: it has no timing, runs no further samples,
+    * and is returned in the failed list (in `queries` order), so an
+    * exception is never recorded as a fast run. Per sample of the
+    * others: (wall s, loadavg before, loadavg after), newest first. */
+  private[graft] def sample(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)], reps: Int)
+      : (Map[String, List[(Double, Double, Double)]], Seq[String]) = {
+    val failed = collection.mutable.Set[String]()
+    def run(name: String, fn: Query, what: String): Unit = {
+      try materialize(fn(spark, sfDir))
+      catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[bench] $name $what failed: $e")
+      }
+      // untimed: block cleanup is harness bookkeeping, not query work
+      dropLeftoverBlocks(spark)
+    }
+    // One untimed warmup pass over the whole suite (janino codegen
+    // compile, JIT, broadcast thread-pool spin-up — one-time costs a
+    // long-lived cluster job amortizes), then the timed ROUND-ROBIN
+    // passes: pass 1 times every query, then pass 2, and so on, so
+    // the samples of any query are separated by a full suite
+    // (~minutes). min-of-reps is the steady-state estimator; spreading
+    // the samples means a sustained host-load window (observed on
+    // this shared box: 2-60x spikes lasting minutes) dents one sample
+    // of many queries instead of all samples of a few — consecutive
+    // min-of-3 cannot dodge noise that outlasts the 3 runs. Nothing
+    // is cached between runs: each run re-executes the full plan
+    // including any fit/collect the operator performs.
+    queries.foreach { case (name, fn) => run(name, fn, "warmup") }
+    // per sample: (wall s, loadavg before, loadavg after) — the load
+    // pair travels with its sample so the committed record can show
+    // the min-wall sample's host context (r16, VERDICT r15 #3)
+    val samples =
+      collection.mutable.Map[String, List[(Double, Double, Double)]]()
+    for (_ <- 1 to reps; (name, fn) <- queries if !failed(name)) {
+      val l0 = loadavg()
+      val t0 = System.nanoTime()
+      run(name, fn, "sample")
+      val wall = (System.nanoTime() - t0) / 1e9
+      if (!failed(name))
+        samples(name) = (wall, l0, loadavg()) :: samples.getOrElse(name, Nil)
+    }
+    (samples.toMap -- failed, queries.map(_._1).filter(failed))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Session warmup (filesystem/scheduler/BlockManager init).
     try spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().collect()
@@ -105,50 +150,12 @@ object Bench {
     val names = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       tier != "prod" || !SparkEntry.evalQueries.contains(n) }
     val calStart = calibrate(spark)
-    // One untimed warmup pass over the whole suite (janino codegen
-    // compile, JIT, broadcast thread-pool spin-up — one-time costs a
-    // long-lived cluster job amortizes), then R timed ROUND-ROBIN
-    // passes: pass 1 times every query, then pass 2, then pass 3, so
-    // the three samples of any query are separated by a full suite
-    // (~minutes). min-of-3 is the steady-state estimator; spreading
-    // the samples means a sustained host-load window (observed on
-    // this shared box: 2-60x spikes lasting minutes) dents one sample
-    // of many queries instead of all samples of a few — consecutive
-    // min-of-3 cannot dodge noise that outlasts the 3 runs. Nothing
-    // is cached between runs: each run re-executes the full plan
-    // including any fit/collect the operator performs.
-    names.foreach { case (name, fn) =>
-      try materialize(fn(spark, sfDir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name warmup failed: $e")
-      }
-      dropLeftoverBlocks(spark)
-    }
-    // per sample: (wall s, loadavg before, loadavg after) — the load
-    // pair travels with its sample so the committed record can show
-    // the min-wall sample's host context (r16, VERDICT r15 #3)
-    val samples =
-      collection.mutable.Map[String, List[(Double, Double, Double)]]()
-        .withDefaultValue(Nil)
-    for (_ <- 1 to 3) {
-      names.foreach { case (name, fn) =>
-        val l0 = loadavg()
-        val t0 = System.nanoTime()
-        try materialize(fn(spark, sfDir))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: $e")
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        samples(name) = (wall, l0, loadavg()) :: samples(name)
-        // untimed: block cleanup is harness bookkeeping, not query work
-        dropLeftoverBlocks(spark)
-      }
-    }
+    val (samples, failed) = sample(spark, sfDir, names, reps = 3)
     val calEnd = calibrate(spark)
-    val results = names.map { case (name, _) =>
-      name -> samples(name).map(_._1).min }
+    val timed = names.map(_._1).filter(samples.contains)
+    val results = timed.map(name => name -> samples(name).map(_._1).min)
     // the min-wall sample's (load before, load after) per query
-    val minLoads: Map[String, (Double, Double)] = names.map { case (name, _) =>
+    val minLoads: Map[String, (Double, Double)] = timed.map { name =>
       val best = samples(name).minBy(_._1)
       name -> (best._2, best._3)
     }.toMap
@@ -163,6 +170,8 @@ object Bench {
           .map { case (t, l0, l1) => f"$t%.2f@$l0%.1f-$l1%.1f" }
           .mkString(","))
     }
+    if (failed.nonEmpty) System.err.println(
+      s"[bench] failed ${failed.size} of ${names.size}: ${failed.mkString(",")}")
     // Per-query regression gate (r8, VERDICT r7 #3): diff against the
     // PREVIOUS committed full record before overwriting it, and name
     // every query moving >1.5x AND >0.3s — the dd_lsh_verified class
@@ -176,7 +185,7 @@ object Bench {
     // never clobber the full record the regression gate diffs against
     // (the diff above still works: it only inspects queries present
     // in the current run).
-    writeFullRecord(results, sfDir,
+    writeFullRecord(results, failed, sfDir,
       if (tier == "all") "" else s"_$tier",
       (calStart, calEnd), minLoads)
     println(formatLine(results, sfDir))
@@ -240,7 +249,7 @@ object Bench {
   }
 
   private def writeFullRecord(results: Seq[(String, Double)],
-      sfDir: String, suffix: String = "",
+      failed: Seq[String], sfDir: String, suffix: String = "",
       cal: (Double, Double) = (-1.0, -1.0),
       minLoads: Map[String, (Double, Double)] = Map.empty): Unit = {
     val sf = sfDir.split('/').last + suffix
@@ -260,11 +269,13 @@ object Bench {
     val loads = minLoads.toSeq.sortBy(_._1).map { case (k, (l0, l1)) =>
       "\"" + k + "\":[" + f2(l0) + "," + f2(l1) + "]"
     }.mkString("{", ",", "}")
+    // queries that threw: absent from "queries" and the total
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec",""" +
         s""""tiers":${tiersJson(results, f3)},"queries":$qs,""" +
         s""""cal":{"start":${f2(cal._1)},"end":${f2(cal._2)}},""" +
-        s""""qload":$loads,"sf":"$sf"}"""
+        s""""qload":$loads,"failed":$failedJson,"sf":"$sf"}"""
     try {
       val p = java.nio.file.Paths.get(s"bench_full_$sf.json")
       java.nio.file.Files.write(p,

@@ -106,7 +106,7 @@ object TextNative {
     * the native twin of the zip_with-concat chain in
     * `TextOps.wordShinglesAllHof` (r17): that chain paid one
     * interpreted zip_with pass per extra gram word, ~16 s of task
-    * CPU in dd_span_scrub's fan-out stage at sf0.1 (JobProfile).
+    * CPU in dd_span_scrub's fan-out stage at sf0.1 (Probe jobs).
     * Empty array (not null) for docs shorter than n words, exactly
     * like slice(ws, 1, 0). Parity in TextNativeSpec. */
   def wordShinglesAll(text: UTF8String, n: Int): ArrayData = {
@@ -162,6 +162,10 @@ object TextNative {
     new GenericArrayData(out)
   }
 
+  private def outOfDomain(fn: String, v: Long, rule: String): Nothing =
+    throw new IllegalArgumentException(s"$fn: element $v $rule: the " +
+      "pos·2^31 + fp packing holds 31-bit fingerprints only")
+
   /** Robust-winnowing selection (Schleimer–Wilkerson–Aiken) over a
     * hash sequence: per window of `w` consecutive hashes (1-based
     * starts 1..max(n-w+1, 1), tail window clamped), select the
@@ -171,10 +175,12 @@ object TextNative {
     * window that form paid two `slice` allocations, an interpreted
     * filter over a generated sequence, array_min twice and
     * array_max — ~15 s of task CPU and ~1 s of GC at sf0.1
-    * (JobProfile dd_winnow_pairs). Null elements are skipped like
+    * (Probe jobs dd_winnow_pairs). Null elements are skipped like
     * array_min does; an all-null window selects nothing (the HOF's
     * array_max-over-empty → null → filtered). Parity incl. null and
-    * short-doc cases pinned in TextNativeSpec. */
+    * short-doc cases pinned in TextNativeSpec. Elements must lie in
+    * [0, 2³¹) (shingle_hashes emits h48 mod a 31-bit prime): a value
+    * outside would corrupt the pos/fp split, so it throws instead. */
   def winnowSelect(hv: ArrayData, w: Int): ArrayData = {
     val n = hv.numElements()
     val upTo = math.max(n - (w - 1), 1)
@@ -189,6 +195,8 @@ object TextNative {
       while (j <= end) {
         if (!hv.isNullAt(j - 1)) {
           val v = hv.getLong(j - 1)
+          if (v < 0L || v >= 2147483648L)
+            outOfDomain("winnow_select", v, "is outside [0, 2^31)")
           if (!any || v < mn) { mn = v; any = true }
         }
         j += 1
@@ -216,7 +224,8 @@ object TextNative {
     * winnow path. Null elements dropped like array_distinct keeps
     * them... (they cannot occur: winnow_select emits non-null), but
     * mirrored exactly anyway: a null element maps to null and
-    * array_distinct KEEPS one null — so does this. */
+    * array_distinct KEEPS one null — so does this. A negative element
+    * is no winnow_select packing and has no low-31 fp, so it throws. */
   def packedLow31(sel: ArrayData): ArrayData = {
     val n = sel.numElements()
     val out = new scala.collection.mutable.ArrayBuffer[Any]()
@@ -227,7 +236,9 @@ object TextNative {
       if (sel.isNullAt(i)) {
         if (!sawNull) { sawNull = true; out += null }
       } else {
-        val v = sel.getLong(i) % 2147483648L
+        val p = sel.getLong(i)
+        if (p < 0L) outOfDomain("packed_low31", p, "is negative")
+        val v = p % 2147483648L
         if (seen.add(v)) out += v
       }
       i += 1
@@ -317,8 +328,9 @@ object TextNative {
     * empty bin j borrows from the first non-empty bin (j+t) mod K
     * with offset t·OphC. ~K× less hash arithmetic per shingle at the
     * same projection shape (Dedup.ophSignaturesAgg is the
-    * declarative executable spec; tools/OphBench quantifies the
-    * win). NULL for shingle-less docs, like [[minhashSig]]. */
+    * declarative executable spec; BASELINE.md "OphBench: K-affine
+    * vs one-permutation signatures" quantifies the win). NULL for
+    * shingle-less docs, like [[minhashSig]]. */
   def ophSig(text: UTF8String, n: Int): ArrayData = {
     val words = text.toString.split(" ", -1)
     if (words.length < n) return null

@@ -203,7 +203,8 @@ object Cluster {
   /** [[semDedup]] with the production scaling rule applied: k = √N
     * (floored at 8), which holds E[cluster size] = √N and total
     * within-cluster pair volume ≈ N·√N/2 — near-linear, where a fixed
-    * k degrades quadratically (measured in tools/ClusterScale: 4×
+    * k degrades quadratically (BASELINE.md "Clustering/
+    * decontamination scale evidence": 4×
     * corpus at fixed k=8 → 16× pairs). N counts the usable base (the
     * quantized rows with positive norm) and is read from the SAME
     * localCheckpoint the fit iterates over — one corpus scan total,

@@ -131,7 +131,7 @@ object CodeCuration {
     // spread the RAW docs, render after the exchange (r16): the
     // render chain is indexed-lambda HOFs (interpreted), so it must
     // run at cluster parallelism, and the spread shuffle then carries
-    // raw doc rows, not the ~4.5x larger rendered string (JobProfile:
+    // raw doc rows, not the ~4.5x larger rendered string (Probe jobs:
     // 0.63 s single-task render feeding a 3.7 MB exchange before)
     renderCode(Partitioning.spread(docs))
       .select(col("doc_id"),

@@ -165,8 +165,8 @@ object Dedup {
 
   /** (doc_id, sig, band, bucket) LSH band table — bucket = ':'-joined
     * minhashes of the band. Exposed for bucket-occupancy diagnostics
-    * (tools/LshScale) so scale probes measure the EXACT banding the
-    * join uses. */
+    * (BASELINE.md "LSH-family scale evidence") so scale probes
+    * measure the EXACT banding the join uses. */
   def minhashBands(docs: DataFrame, shingleN: Int = 3,
                    bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): DataFrame =
     bandsFrom(minhashSignatures(docs, shingleN), bands, rowsPerBand)
@@ -241,7 +241,7 @@ object Dedup {
     * [[graft.operators.CuratePipeline]] deploys THIS blocker.
     *
     * Signature family: K-AFFINE, by measured choice (r13, VERDICT
-    * r12 #4; tools/OphBench at the 10× probe, 50k docs, auto arm
+    * r12 #4; BASELINE.md "r13 OPH decision": 10× probe, 50k docs, auto arm
     * 4×4): whole-blocker wall 1.16 s affine vs 0.96 s OPH, signature
     * slice 0.20 vs 0.15 s. The 17% gap is NOT kernel cost — it is
     * OPH banding a different unbiased estimator whose candidate set
@@ -579,7 +579,8 @@ object Dedup {
     * scan), and inside the kernel each shingle costs ONE md5 + one
     * bin update instead of K affine transforms
     * (functions.textNative.oph_sig; [[ophSignaturesAgg]] is the
-    * declarative executable spec, tools/OphBench the measurement).
+    * declarative executable spec; BASELINE.md "OphBench: K-affine
+    * vs one-permutation signatures" the measurement).
     * Estimator quality is equivalent for docs with ≥ K shingles
     * (the common case at corpus scale); short docs lean on
     * densified slots, which still collide iff the underlying bin
@@ -712,7 +713,8 @@ object Dedup {
     * oracle can verify the guarantee itself with a brute-force
     * hamming filter rather than replicating the banding.
     *
-    * Measured on the boilerplate-heavy sf0.1 corpus (tools/LshScale):
+    * Measured on the boilerplate-heavy sf0.1 corpus (BASELINE.md
+    * "LSH-family scale evidence, one order further"):
     * 65,844 candidates = 0.53% of all pairs (the 12-bit single-chunk
     * blocker: 701,704 = 5.6%), max bucket 81 vs 549, and all 3,359
     * true d<=3 pairs found. 24-bit keys also discriminate ~4000x
@@ -976,7 +978,8 @@ object Dedup {
       maxBucketSize, checkpointShingles = true)
 
   /** [[lshVerified]] with the shingle-checkpoint choice exposed for
-    * measurement (tools/Scratch, r8 regression adjudication): true =
+    * measurement (r8 regression adjudication, SURVEY.md's block-cleanup
+    * note): true =
     * ONE corpus scan + shingle build feeds both stages (signature
     * aggregation AND the verify join); false = each consumer
     * re-shingles (4 rescans, zero executor-storage footprint). */
@@ -1071,7 +1074,7 @@ object Dedup {
       // AQE-coalesced to 1 task (~0.5 MB of pair ids), and that one
       // task then carries the broadcast shingle joins, the per-pair
       // intersection count, both size joins and the containment
-      // filter (JobProfile: 0.78 s CPU on 1 task of a 2.5 s wall).
+      // filter (Probe jobs: 0.78 s CPU on 1 task of a 2.5 s wall).
       // Keyed on doc_a ALONE — (doc_a, doc_b) reproduces the
       // distinct's partitioning and is pruned as redundant — and
       // doc_a partitioning still SATISFIES the (doc_a, doc_b) agg's
@@ -1164,13 +1167,13 @@ object Dedup {
     * the bound) that returns the EXACT distance whenever it is
     * <= maxDist, so the emitted rows are identical to the unbounded
     * form (measured 2.6x faster on the verify stage: 4.7 -> 1.8 s
-    * at sf0.1's 105k candidates; tools/Scratch editdup). The df-cap
+    * at sf0.1's 105k candidates). The df-cap
     * on blocking, not the verify, is what keeps 100 TB feasible. */
   def editVerified(docs: DataFrame, snipLen: Int = 96, gramLen: Int = 16,
                    maxDf: Int = 16, maxDist: Int = 24): DataFrame = {
     // spread BEFORE the gram explode (r16): single-row-group bench
     // parquet arrives as one partition, so the explode + substr ran
-    // single-threaded (JobProfile: 0.5 s on 1 task feeding a 5.4 MB
+    // single-threaded (Probe jobs: 0.5 s on 1 task feeding a 5.4 MB
     // exchange) — the same hygiene every other gram builder applies
     val snip = graft.functions.Partitioning.spread(docs)
       .where(length(col("text")) >= gramLen)
@@ -1189,7 +1192,7 @@ object Dedup {
       // is CPU per PAIR (a banded DP over snipLen×maxDist cells),
       // which AQE's byte-based partition coalescing cannot see — at
       // sf0.1 it folded the verify onto 2 tasks (~2.4 MB of pairs)
-      // and the banded DP ran 2-way on a 32-core box (JobProfile:
+      // and the banded DP ran 2-way on a 32-core box (Probe jobs:
       // 1.19 s wall / 2 tasks on the verify job). A user repartition
       // is exempt from AQE coalescing; it must key on doc_a ALONE —
       // (doc_a, doc_b) would reproduce the distinct's partitioning
@@ -1723,7 +1726,8 @@ object Dedup {
     * incremental probe, and the bucketed snapshot writer. Measured
     * and deliberately NOT spread — mechanism corrected in r17: r16
     * blamed a ~0.25 s/task fixed stage cost, which the r17 probe
-    * (tools/Scratch taskcost) debunked (true per-task setup ≤ 2 ms).
+    * (BASELINE.md "The ~0.2–0.4 s/task fixed stage cost is dead")
+    * debunked (true per-task setup ≤ 2 ms).
     * The honest reason the spread loses (re-A/B'd r17, spread in
     * BOTH band builders: sim_knn_upsert 1.95 → 2.71, sim_knn_reband
     * 1.79 → 2.08, pipeline_store_vec 4.96 → 6.82 s best-of-5
@@ -2044,8 +2048,9 @@ object Dedup {
     * Exact Jaccard is computed only for candidate pairs (the
     * [[lshVerified]] discipline); the K-affine and one-permutation
     * families are scored against the SAME exact truth, so the report
-    * doubles as the minhash-vs-OPH accuracy comparison the OphBench
-    * wall-clock table (BASELINE r7) deliberately left unmeasured. */
+    * doubles as the minhash-vs-OPH accuracy comparison the BASELINE.md
+    * "OphBench: K-affine vs one-permutation signatures" wall-clock
+    * table deliberately left unmeasured. */
   def minhashCalibration(docs: DataFrame, shingleN: Int = 3): DataFrame = {
     val sh = shingles(docs, shingleN).localCheckpoint(true)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))

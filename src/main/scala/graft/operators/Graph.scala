@@ -220,9 +220,10 @@ object Graph {
     // Measured and deliberately NOT repartitioned — mechanism
     // CORRECTED in r17 (VERDICT r16 #4): r16 blamed ~0.36 s/task of
     // "fixed per-task setup (two broadcast degree tables)", but a
-    // controlled probe (tools/Scratch taskcost: constant work split
-    // over n ∈ 1..32 tasks, 0/1/2 broadcast joins) puts true
-    // per-task setup at ≤ 2 ms, and JobProfile's r17 deserialize
+    // controlled probe (BASELINE.md "The ~0.2–0.4 s/task fixed stage
+    // cost is dead": constant work split over n ∈ 1..32 tasks, 0/1/2
+    // broadcast joins) puts true per-task setup at ≤ 2 ms, and the
+    // r17 job profile's deserialize
     // split shows the wedge join itself is ~0.2 s CPU — cheap. The
     // ~1 s of stage CPU lives in the CLOSING join + count, which the
     // r16 wedge-side pin never touched (wedge and closing stages

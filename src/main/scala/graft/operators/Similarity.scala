@@ -913,7 +913,8 @@ object Similarity {
     * discipline (exact-integer assign, floor(mean) update, empty
     * cell keeps its centroid), but the trained centroids are no
     * longer corpus rows, so no SQL oracle pins it — declared
-    * rows-only (x_ prefix), with recall measured in tools/SimScale. */
+    * rows-only (x_ prefix), with recall in BASELINE.md "ANN recall
+    * evidence". */
   def knnIvfPqTrained(embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
                       nCentroids: Int = 8, nProbe: Int = 2,
                       nSub: Int = 8, nCodes: Int = 16,
@@ -1421,7 +1422,8 @@ object Similarity {
     * content-only rungs (score once, checkpoint, endpoint-restrict
     * for the dedup half) on the argument that shared scoring scales
     * as nQueries × N while the unshareable parts do not. The r14
-    * measurement at production nQueries (Scratch ladder, interleaved
+    * measurement at production nQueries (BASELINE.md r14 ledger
+    * item 4, interleaved
     * best-of-2, shared vs this two-independent-ladders form) REFUTED
     * it at scale: 10× probe (20k vecs) nq=8 29.3 vs 24.8 s, nq=64
     * 33.5 vs 29.8, nq=256 71.1 vs 53.8 — the independent form wins

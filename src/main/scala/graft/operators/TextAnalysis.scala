@@ -1095,7 +1095,7 @@ object TextAnalysis {
     // this but the call never landed): `pairs` feeds THREE aggregate
     // branches (c12, c1, the scoring join), each replaying the
     // tokenize+explode — on the bench parquet's single scan partition
-    // all three replays ran single-threaded (JobProfile: 3 × ~0.4 s
+    // all three replays ran single-threaded (Probe jobs: 3 × ~0.4 s
     // one-task jobs in tx_lm_buckets). No-op on well-split input; the
     // corpus-sized pairs stream itself stays un-materialized by
     // design (rescans are storage-parallel).
@@ -1311,7 +1311,7 @@ object TextAnalysis {
     // ([[winnowSelectedHof]], kept as the executable spec and the
     // shape the DuckDB oracle restates) paid two slice allocations,
     // an interpreted filter and two array_mins PER WINDOW — ~15 s of
-    // task CPU + ~1 s GC at sf0.1 (JobProfile dd_winnow_pairs).
+    // task CPU + ~1 s GC at sf0.1 (Probe jobs dd_winnow_pairs).
     // Bit-parity pinned in TextNativeSpec.
     Partitioning.spread(docs)
       .select(col("doc_id"),

@@ -12,7 +12,7 @@ import graft.functions._
   *
   *   spark.sql.extensions=graft.plans.GraftExtensions
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * (or a session builder's `.withExtensions(new GraftExtensions)`).
   * Injects every native expression as a SQL function so `spark.sql`
   * users get the same codegen'd hot paths as the DataFrame API.
   *

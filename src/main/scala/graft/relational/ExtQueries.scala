@@ -5427,7 +5427,7 @@ object ExtQueries {
       Similarity.knnIvfPqRerank(Tables.embeddings(s, d))),
     // Lloyd-trained PQ codebooks: centroids are no longer corpus rows,
     // so no SQL oracle can pin them -> rows-only check (x_ prefix);
-    // recall measured against brute force in tools/SimScale
+    // recall against brute force: BASELINE.md "ANN recall evidence"
     "x_knn_pq_trained" -> ((s, d) =>
       Similarity.knnIvfPqTrained(Tables.embeddings(s, d))),
     "tx_tokens" -> ((s, d) => TextAnalysis.tokenCounts(Tables.documents(s, d))),

@@ -1943,7 +1943,7 @@ object RelQueries {
     // User repartition on the join key (r16): the self-join's input
     // exchange was ENSURE_REQUIREMENTS, which AQE coalesced to 5
     // tasks at sf0.1 (6 MB of pruned baskets) while the pair
-    // fan-out + aggregate are CPU-dense (JobProfile: 2.4 s of task
+    // fan-out + aggregate are CPU-dense (Probe jobs: 2.4 s of task
     // time on 5 tasks). A user repartition is exempt from
     // coalescing, and both self-join sides still reuse this ONE
     // exchange. Scale-adaptive (cluster parallelism), same key the

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builder-side probe-corpus generator (dev tool, not product
   * surface): synthesizes an ~Nx larger documents + embeddings pair
-  * from an existing SF directory so the scale probes (LshScale /
-  * ClusterScale) can run one order of magnitude past the driver
+  * from an existing SF directory so scale measurements (Bench,
+  * Verify, `Probe`; the BASELINE.md "scale evidence, one order
+  * further" entries) can run one order of magnitude past the driver
   * testdata. Deterministic: copy c of a doc appends the token " v<c>"
   * (a one-token near-duplicate — the worst case for LSH blockers:
   * every base doc gains `copies-1` high-Jaccard variants, making the
@@ -22,14 +22,7 @@ object ProbeGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "target/probe/sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     (0 until copies).map { c =>
@@ -76,15 +69,7 @@ object ProbeGen {
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else "target/probe/sf1full"
     val copies = if (args.length > 3) args(3).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val shift = 1000000000L
 
     def scaled(table: String, keyShifts: Seq[String]): Unit = {
@@ -152,13 +137,7 @@ object ProbeGen {
     val nClusters = if (args.length > 3) args(3).toInt else 16
     val sigma = if (args.length > 4) args(4).toDouble else 0.2
     val dim = 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     import spark.implicits._
     val centers = Array.tabulate(nClusters) { j =>
       val rnd = new java.util.Random(7919L * (j + 1))

@@ -11,7 +11,8 @@ import graft.streaming.StreamingCuration
 /** Streaming-throughput micro-bench (dev tool — the r6 evidence row
   * VERDICT r5 asked for): events/s through the two always-on ingest
   * pipelines, driven by MemoryStream micro-batches on the Bench
-  * session shape (local[32], 32 shuffle partitions).
+  * session shape (`graft.Session`: local[cores], shuffle partitions =
+  * cores).
   *
   *  - text path: dedupStream (stateful, watermark 1 h) → qualityGate
   *    (stateless) → admitStream (stream-static anti-join against the
@@ -49,24 +50,10 @@ object StreamBench {
     * env: STREAMBENCH_PROVIDER, STREAMBENCH_BATCHES (default 16),
     * STREAMBENCH_ROWS_PER_BATCH (default 250000). */
   private def statewallMain(): Unit = {
-    val provider = sys.env.getOrElse("STREAMBENCH_PROVIDER", "hdfs")
-    val providerClass =
-      if (provider == "rocksdb")
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      else
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     val batches = sys.env.getOrElse("STREAMBENCH_BATCHES", "16").toInt
     val perBatch =
       sys.env.getOrElse("STREAMBENCH_ROWS_PER_BATCH", "250000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.stateStore.providerClass", providerClass)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, provider) = providerSession()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(minute: Int) = new Timestamp((100000 + minute) * 60000L)
@@ -124,7 +111,7 @@ object StreamBench {
     val perBatch =
       sys.env.getOrElse("STREAMBENCH_ROWS_PER_BATCH", "2500").toInt
     val kind = sys.env.getOrElse("STREAMBENCH_KIND", "all")
-    val spark = benchSession()
+    val spark = graft.Session()
     import spark.implicits._
     import graft.streaming.StoreMaintenance
     def ts(minute: Int) = new Timestamp((100000 + minute) * 60000L)
@@ -234,7 +221,7 @@ object StreamBench {
     val batches = sys.env.getOrElse("STREAMBENCH_BATCHES", "6").toInt
     val perBatch =
       sys.env.getOrElse("STREAMBENCH_ROWS_PER_BATCH", "2500").toInt
-    val spark = benchSession()
+    val spark = graft.Session()
     import spark.implicits._
     import graft.streaming.StoreMaintenance
     def ts(minute: Int) = new Timestamp((100000 + minute) * 60000L)
@@ -289,7 +276,7 @@ object StreamBench {
     val sizes = sys.env.getOrElse("STREAMBENCH_BUCKET",
       "1000,10000,100000").split(',').map(_.trim.toInt).toSeq
     val cap = sys.env.getOrElse("STREAMBENCH_CAP", "1000").toInt
-    val spark = benchSession()
+    val spark = graft.Session()
     import spark.implicits._
     import graft.streaming.StoreMaintenance
     val peak = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -347,17 +334,21 @@ object StreamBench {
     spark.stop()
   }
 
-  private def benchSession(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  /** The shared session with the state-store provider
+    * STREAMBENCH_PROVIDER names (r7): "rocksdb" measures the production
+    * provider (bundled rocksdbjni; state off-heap, incremental
+    * snapshots), default "hdfs" is the in-memory map provider the
+    * earlier rows used. Set before any query starts, which is when a
+    * query reads it. */
+  private def providerSession(): (SparkSession, String) = {
+    val provider = sys.env.getOrElse("STREAMBENCH_PROVIDER", "hdfs")
+    val spark = graft.Session()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      if (provider == "rocksdb")
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+      else
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    (spark, provider)
   }
 
   def main(args: Array[String]): Unit = {
@@ -369,26 +360,7 @@ object StreamBench {
     val nText = sys.env.getOrElse("STREAMBENCH_TEXT_ROWS", "200000").toInt
     val nVec = sys.env.getOrElse("STREAMBENCH_VEC_ROWS", "50000").toInt
     val batches = sys.env.getOrElse("STREAMBENCH_BATCHES", "20").toInt
-    // r7: state-store provider switch — "rocksdb" measures the
-    // production provider (bundled rocksdbjni; state off-heap,
-    // incremental snapshots), default "hdfs" is the in-memory map
-    // provider the earlier rows used
-    val provider = sys.env.getOrElse("STREAMBENCH_PROVIDER", "hdfs")
-    val providerClass =
-      if (provider == "rocksdb")
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      else
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.streaming.stateStore.providerClass", providerClass)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, provider) = providerSession()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

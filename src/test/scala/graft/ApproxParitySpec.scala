@@ -108,8 +108,9 @@ class ApproxParitySpec extends AnyFunSuite {
     // Lloyd fit and search are fully deterministic on a fixed corpus
     // (integer-exact assign, floor-mean update, id tiebreaks), so the
     // recall is a CONSTANT for this fixture — the floor is a real
-    // contract, not a flaky statistical bound. tools/SimScale measures
-    // the operating curve; this pins the shipped defaults.
+    // contract, not a flaky statistical bound. BASELINE.md "ANN recall
+    // evidence" records the operating curve; this pins the shipped
+    // defaults.
     val e = graft.relational.Tables.embeddings(spark, sfDir)
     val brute = graft.operators.Similarity.knnBrute(e).collect()
       .map(r => (r.getLong(0), r.getLong(2)))

@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites (guide: one session per
-  * suite via lazy val; sharing across suites keeps `sbt test` fast). */
+  * suite via lazy val; sharing across suites keeps `sbt test` fast),
+  * built by the product factory so specs run the engine settings
+  * Bench and Verify run. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session(cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -97,6 +97,41 @@ class TextNativeSpec extends AnyFunSuite {
     }
   }
 
+  test("winnow_select / packed_low31 reject elements outside the 31-bit " +
+    "fingerprint domain (interpreted and codegen paths)") {
+    import graft.functions.textNative
+    import org.apache.spark.sql.Column
+    def causes(t: Throwable) =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    // a bare local relation is evaluated by the optimizer
+    // (interpreted); behind a repartition the projection runs codegen'd
+    def paths(hv: Seq[Long]) = {
+      val df = Seq(hv).toDF("hv")
+      Seq(df, df.repartition(1))
+    }
+    def rejects(hv: Seq[Long], f: Column => Column, msg: String): Unit =
+      paths(hv).foreach { df =>
+        val e = intercept[Exception](df.select(f(col("hv"))).collect())
+        assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException]
+          && c.getMessage.contains(msg)), s"$hv: $e")
+      }
+    val winnow = (c: Column) => textNative.winnow_select(c, 4)
+    rejects(Seq(3L, -1L, 5L), winnow, "winnow_select: element -1 ")
+    rejects(Seq(3L, 2147483648L), winnow, "winnow_select: element 2147483648 ")
+    rejects(Seq(2147483648L, -5L), textNative.packed_low31,
+      "packed_low31: element -5 ")
+    // the domain's edges stay accepted: fp 0 and 2^31 - 1 select, and
+    // the packing of (pos 1, fp 0) = 2^31 unpacks to fp 0
+    paths(Seq(0L, 2147483647L)).foreach { df =>
+      assert(df.select(winnow(col("hv"))).head().getSeq[Long](0) ==
+        Seq(2147483648L))
+    }
+    paths(Seq(2147483648L, 4294967295L)).foreach { df =>
+      assert(df.select(textNative.packed_low31(col("hv"))).head()
+        .getSeq[Long](0) == Seq(0L, 2147483647L))
+    }
+  }
+
   test("native word_shingles_all == HOF spec (values, order, multiplicity)") {
     val df = cases.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     for (n <- Seq(2, 3, 4)) {
