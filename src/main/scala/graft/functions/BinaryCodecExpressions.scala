@@ -82,7 +82,9 @@ case class IntToBigEndian4(child: Expression)
 }
 
 /** Deterministic pseudo-random lowercase string: `len` chars drawn from
-  * [a-z] (codepoints 97..122) via xorshift64 seeded per row.
+  * [a-z] (codepoints 97..122) via xorshift64 seeded per row, six letters
+  * per generator step by multiply-shift, with no division
+  * ([[GraftExprs.randLowercase]]).
   *
   * The reference generates `Random.ints(97, 123).limit(n)`
   * (reference: .../topology/ErrorHandlingMapper.java:14-18); its tests
@@ -120,20 +122,44 @@ object GraftExprs {
     ((b(0) & 0xff) << 24) | ((b(1) & 0xff) << 16) |
       ((b(2) & 0xff) << 8) | (b(3) & 0xff)
 
-  /** xorshift64-based [a-z] string; null for negative length. */
+  /** xorshift64-based [a-z] string; null for negative length. Each
+    * step yields six letters, the first three base-26 digits of each
+    * 32-bit half of the state read as a fraction of 2^32: multiplying the
+    * fraction by 26 lifts the next digit above bit 32 (multiply-shift
+    * range reduction, Lemire, ACM TOMACS 2019), so no letter costs a
+    * division. */
   def randLowercase(seed: Long, len: Int): UTF8String = {
     if (len < 0) return null
     if (len == 0) return UTF8String.EMPTY_UTF8
     val bytes = new Array[Byte](len)
     var x = seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL
     var i = 0
-    while (i < len) {
+    while (i + 6 <= len) {
       x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-      bytes(i) = (97 + java.lang.Long.remainderUnsigned(x, 26L)).toByte
-      i += 1
+      var h = (x >>> 32) * 26; bytes(i) = (97 + (h >>> 32)).toByte
+      h = (h & Low32) * 26; bytes(i + 1) = (97 + (h >>> 32)).toByte
+      h = (h & Low32) * 26; bytes(i + 2) = (97 + (h >>> 32)).toByte
+      h = (x & Low32) * 26; bytes(i + 3) = (97 + (h >>> 32)).toByte
+      h = (h & Low32) * 26; bytes(i + 4) = (97 + (h >>> 32)).toByte
+      h = (h & Low32) * 26; bytes(i + 5) = (97 + (h >>> 32)).toByte
+      i += 6
+    }
+    if (i < len) { // the last one to five letters: a prefix of one step's six
+      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+      var h = x >>> 32
+      var k = 0
+      while (i < len) {
+        if (k == 3) h = x & Low32
+        h *= 26
+        bytes(i) = (97 + (h >>> 32)).toByte
+        h &= Low32
+        i += 1; k += 1
+      }
     }
     UTF8String.fromBytes(bytes)
   }
+
+  private final val Low32 = 0xFFFFFFFFL
 }
 
 /** Column-level API over the expressions above, plus SQL registration. */

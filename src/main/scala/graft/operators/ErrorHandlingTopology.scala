@@ -21,9 +21,9 @@ import graft.functions.codecs
   * label, the mapper and the size guard evaluated once per record. The
   * four sinks are then label filters over the routed frame
   * ([[branchesOf]]). A caller that materializes more than one branch
-  * persists the ROUTED frame (see `graft.streaming.StreamingTopology`),
-  * so the scan, the decode and the mapper run once per batch, and each
-  * branch reads the cache.
+  * checkpoints the ROUTED frame once (see
+  * `graft.streaming.StreamingTopology`), so the scan, the decode and the
+  * mapper run once per batch, and each branch reads the checkpoint.
   */
 object ErrorHandlingTopology {
 

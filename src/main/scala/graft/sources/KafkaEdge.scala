@@ -46,15 +46,6 @@ object KafkaEdge {
       .option("startingOffsets", "earliest")
       .load()
 
-  /** Batch read (same options; used for reprocessing/backfill). */
-  def readBatch(spark: SparkSession, bootstrap: String,
-                topics: TopicConfig): DataFrame =
-    spark.read.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topics.input)
-      .option("includeHeaders", "true")
-      .load()
-
   /** Shape a branch DataFrame for the Kafka sink: exactly the
     * columns the connector consumes. `headers` is passed through
     * when present (the DLT branches carry `error.message`). */

@@ -188,17 +188,6 @@ object EventTimeOps {
       .select(col("window_start"), col("e.term").as("term"),
         col("e.est").as("n"))
 
-  /** Sliding-window variant (windowLen every slide). */
-  def slidingRollup(events: DataFrame, windowLen: String = "1 hour",
-                    slide: String = "15 minutes",
-                    watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("event_type"), col("n"))
-
   /** Built-in session windows: per-user sessions closed after `gap`
     * of event-time inactivity. */
   def sessionRollup(events: DataFrame, gap: String = "30 minutes",

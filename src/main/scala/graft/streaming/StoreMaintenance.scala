@@ -3,6 +3,8 @@ package graft.streaming
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
@@ -212,9 +214,21 @@ object StoreMaintenance {
     * count() job plus the filter aggregation; the observed count
     * removes the count() job from every fold. Same sidecar bytes:
     * one id per docs row, so the observed row count equals the old
-    * `ids.count()` exactly. */
-  private def writeDocsWithBloom(docs: DataFrame, idCol: String,
-                                 dir: String): Unit = {
+    * `ids.count()` exactly.
+    *
+    * The sidecar is built by a second pass over `docs`, so `docs` must
+    * recompute to the rows the first pass wrote: every leaf of its plan
+    * is an eagerly checkpointed RDD or local data, and the plan is
+    * deterministic. A sidecar that misses a written id would not fail
+    * open like a missing one; it would admit the redelivered doc. */
+  private[graft] def writeDocsWithBloom(docs: DataFrame, idCol: String,
+                                        dir: String): Unit = {
+    val plan = docs.queryExecution.analyzed
+    require(plan.deterministic && plan.collectLeaves().forall {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _: LocalRelation => true
+      case _ => false
+    }, s"writeDocsWithBloom needs checkpointed or local input, got:\n$plan")
     val obs = org.apache.spark.sql.Observation()
     docs.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))

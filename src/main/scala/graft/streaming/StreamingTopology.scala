@@ -4,7 +4,8 @@ import java.util.concurrent.{CompletableFuture, ExecutorService, Executors}
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.graftbridge.StorageBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
@@ -15,24 +16,31 @@ import graft.operators.{ErrorChannel, ErrorHandlingTopology}
   * Kafka Streams' `split()` fans one consumed stream into several sinks
   * inside one task (reference: .../topology/ErrorHandlingTopology.java:32-44).
   * Structured Streaming allows one sink per query, so the faithful
-  * single-read fan-out is `foreachBatch` + `persist()` + one write per
-  * branch (SURVEY.md §2.1 #4): the micro-batch is routed once
+  * single-read fan-out is `foreachBatch` + one materialization + one
+  * write per branch (SURVEY.md §2.1 #4): the micro-batch is routed once
   * (`ErrorHandlingTopology.route`: decode, mapper and size guard, one
-  * narrow projection), the routed sink-shaped records are cached, and
-  * the four branches are label filters over that cache. The four sink
-  * writes are independent, so they run concurrently, each on its own
-  * thread carrying the caller's Spark local properties and active
-  * session: the batch's jobs share the cores a source with few
-  * partitions leaves idle, and the driver plans one sink while another
-  * runs. The first job to reach a routed partition computes it; the
-  * others wait on its block lock and read the cached block, so the
-  * mapper still runs once per record. The routed frame is a pure
-  * function of the batch, so a replay recomputes the same bytes (the
-  * D-Streams recompute-from-source argument), whatever order the writes
-  * ran in. All four writes share one epoch: the batch returns only
-  * after all of them have finished, and failure of any write fails the
-  * batch and replays it to all four sinks, preserving the reference's
-  * at-least-once semantics (reference: README.md:31).
+  * narrow projection), one job checkpoints the routed sink-shaped rows
+  * into executor blocks (`localCheckpoint`), and the four branches are
+  * label filters over that checkpoint. The checkpoint cuts the source
+  * off the branches' lineage, so a sink task carries a block index, not
+  * the batch's rows (a `MemoryStream` partition holds its rows), and the
+  * mapper runs once per record. The four sink writes are independent,
+  * so they run concurrently, each on its own thread carrying the
+  * caller's Spark local properties and active session: the batch's jobs
+  * share the cores a source with few partitions leaves idle, and the
+  * driver plans one sink while another runs. All four writes share one
+  * epoch: the batch returns only after all of them have finished, and
+  * failure of any write fails the batch and replays it to all four
+  * sinks, preserving the reference's at-least-once semantics
+  * (reference: README.md:31).
+  *
+  * Fault tolerance: a local checkpoint cannot be recomputed. If an
+  * executor holding its blocks is lost mid-batch, the sink job reading
+  * them fails, so the batch fails and the epoch replays from the source,
+  * the same contract as a failing sink. The routed frame is a pure
+  * function of the batch (the mapper is seeded per row), so the replay
+  * writes the same bytes (the D-Streams recompute-from-source argument),
+  * whatever order the writes ran in.
   */
 object StreamingTopology {
 
@@ -67,8 +75,10 @@ object StreamingTopology {
     * threw it. */
   def processBatch(batch: DataFrame, sinks: Sinks,
                    maxRequestSize: Int = ErrorChannel.DefaultMaxRequestSize): Unit = {
+    // a checkpoint job that fails leaves its partial blocks to the
+    // ContextCleaner, which drops them once the RDD is unreachable
     val routed = ErrorHandlingTopology.route(batch, maxRequestSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)
     try {
       val b = ErrorHandlingTopology.branchesOf(routed, batch.columns.contains("headers"))
       val session = SparkSession.getActiveSession.getOrElse(batch.sparkSession)
@@ -82,11 +92,12 @@ object StreamingTopology {
           }
         }
       // join() ignores interrupts: a stop() cancels the calls' jobs
-      // through their job group, and the cache outlives every call
+      // through their job group, and the blocks outlive every call
       CompletableFuture.allOf(calls: _*).join()
       val first = failure.get
       if (first != null) throw first
-    } finally routed.unpersist()
+    } finally routed.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(StorageBridge.unpersist)
   }
 
   /** Start the streaming query over a streaming Kafka-shaped DataFrame. */

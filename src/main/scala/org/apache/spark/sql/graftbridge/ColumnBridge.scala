@@ -7,8 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ⇄ Expression bridge. Spark 4 marks `ExpressionUtils`
   * `private[sql]`, so third-party Catalyst extensions expose it via a
   * shim object inside the `org.apache.spark.sql` namespace — the same
-  * pattern used by public Spark extension libraries. Nothing else in
-  * this repo lives outside the `graft` namespace. */
+  * pattern used by public Spark extension libraries. Only the shims in
+  * this package live outside the `graft` namespace. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -8,7 +8,8 @@ import graft.functions.{codecs, GraftExprs}
 /** Round-trip laws for the serde-analog expressions (SURVEY.md §5
   * property layer): decode(encode(n)) == n; decode rejects wrong
   * lengths; rand_lowercase length/charset contract
-  * (reference charset [a-z]: ErrorHandlingMapper.java:14-15). */
+  * (reference charset [a-z]: ErrorHandlingMapper.java:14-15), the
+  * digits its kernel draws, and their letter frequencies. */
 class CodecSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -69,15 +70,77 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  /** The kernel's contract spelled out with BigInt: each xorshift64
+    * step gives six letters, the first three base-26 digits of its high
+    * 32-bit half, then of its low half, each half read as a fraction
+    * of 2^32. */
+  private def referenceLetters(seed: Long, len: Int): String = {
+    var x = seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL
+    (0 until len).grouped(6).flatMap { step =>
+      x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+      val halves = Seq(x >>> 32, x & 0xFFFFFFFFL).map(BigInt(_))
+      step.indices.map { k =>
+        val digit = (halves(k / 3) * BigInt(26).pow(k % 3 + 1) >> 32) % 26
+        ('a' + digit.toInt).toChar
+      }
+    }.mkString
+  }
+
   test("rand_lowercase: length == n, charset [a-z], deterministic in seed") {
-    (0 to 100).foreach { n =>
-      val seed = rng.nextLong()
+    // every length through 100, so 0-13 and both sides of each multiple
+    // of 6, checked against the digits each generator step must yield
+    val edgeSeeds = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue)
+    for (n <- (0 to 100) ++ Seq(511, 512, 513); seed <- rng.nextLong() +: edgeSeeds) {
       val s1 = GraftExprs.randLowercase(seed, n)
       val s2 = GraftExprs.randLowercase(seed, n)
       assert(s1 == s2, "deterministic per (seed, n)")
       val str = s1.toString
-      assert(str.length == n)
-      assert(str.forall(c => c >= 'a' && c <= 'z'))
+      assert(str.length == n && s1.numBytes == n, s"($seed, $n): $str")
+      assert(str.forall(c => c >= 'a' && c <= 'z'), s"($seed, $n): $str")
+      assert(str == referenceLetters(seed, n), s"($seed, $n)")
+    }
+  }
+
+  test("rand_lowercase: interpreted eval equals the generated code") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import graft.functions.RandLowercase
+    val e = Seq(RandLowercase(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, IntegerType, nullable = true)))
+    val generated = GenerateUnsafeProjection.generate(e)
+    val interpreted = InterpretedUnsafeProjection.createProjection(e)
+    val inputs = Seq[(Any, Any)]((null, 3), (5L, null), (7L, -1)) ++
+      (0 to 40).map(n => (rng.nextLong(), n))
+    inputs.foreach { case (seed, n) =>
+      val row = InternalRow(seed, n)
+      val g = generated(row).copy()
+      val i = interpreted(row).copy()
+      assert(g.isNullAt(0) == i.isNullAt(0), s"($seed, $n)")
+      if (!g.isNullAt(0)) assert(g.getUTF8String(0) == i.getUTF8String(0), s"($seed, $n)")
+    }
+  }
+
+  test("rand_lowercase: letter frequencies over 1.2M letters pass a chi-square " +
+    "bound, overall and at each of a step's six digit positions") {
+    // consecutive seeds, the least mixed input a caller could give; 52.62
+    // is the 0.999 quantile of chi-square with 25 degrees of freedom
+    val len = 60
+    val counts = Array.ofDim[Long](6, 26)
+    (0L until 20000L).foreach { seed =>
+      val b = GraftExprs.randLowercase(seed, len).getBytes
+      b.indices.foreach(j => counts(j % 6)(b(j) - 'a') += 1)
+    }
+    def chiSquare(c: Seq[Long]): Double = {
+      val expected = c.sum.toDouble / 26
+      c.map(o => (o - expected) * (o - expected) / expected).sum
+    }
+    val overall = (0 until 26).map(l => counts.map(_(l)).sum)
+    assert(overall.sum == 1200000L)
+    assert(chiSquare(overall) < 52.62, s"overall: $overall")
+    counts.zipWithIndex.foreach { case (c, k) =>
+      assert(chiSquare(c.toSeq) < 52.62, s"digit position $k: ${c.toSeq}")
     }
   }
 

@@ -111,10 +111,11 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("dead-letter fan-out: route runs the mapper once; each branch " +
     "processBatch builds reads the routed cache, with no decode or mapper") {
+    import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.functions._
     import graft.functions.{BigEndianInt4Decode, RandLowercase, codecs}
     import graft.operators.ErrorHandlingTopology
@@ -137,10 +138,15 @@ class PlanAuditSpec extends AnyFunSuite {
     StreamingTopology.processBatch(records, StreamingTopology.Sinks(
       sink("output"), sink("process"), sink("deser"), sink("production")))
     assert(plans.keySet == Set("output", "process", "deser", "production"))
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
     plans.foreach { case (name, p) =>
-      // collect/flatMap do not descend into InMemoryRelation's cached plan
-      assert(p.collectFirst { case r: InMemoryRelation => r }.isDefined,
-        s"$name does not read the routed cache:\n$p")
+      // the one leaf is the routed checkpoint, cut off the source: its
+      // lineage ends at the checkpoint's own block reader
+      val leaves = p.collectLeaves()
+      assert(leaves.size == 1, s"$name:\n$p")
+      val rdd = leaves.collectFirst { case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd }
+      assert(rdd.isDefined, s"$name does not read the routed checkpoint:\n$p")
+      assert(lineage(rdd.get).size == 2, s"$name reaches past the checkpoint:\n${rdd.get.toDebugString}")
       assert(count(p, { case e: RandLowercase => e; case e: BigEndianInt4Decode => e }) == 0,
         s"$name re-derives the route:\n$p")
     }

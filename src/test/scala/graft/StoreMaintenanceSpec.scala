@@ -35,6 +35,28 @@ class StoreMaintenanceSpec extends AnyFunSuite {
     StoreMaintenance.vecStoreVecs(spark, store).get
       .collect().map(_.getLong(1)).toSeq
 
+  test("writeDocsWithBloom needs input it can recompute: a frame that is " +
+    "not checkpointed or local is rejected before anything is written") {
+    val ids = spark.range(0L, 6L, 1L, 2).select(col("id").as("vec_id"))
+    val rejected = Seq(
+      "a source scan" -> ids,
+      "a lazy checkpoint" -> ids.localCheckpoint(false),
+      "a nondeterministic projection" ->
+        ids.localCheckpoint(true).withColumn("vec_id", (rand(7) * 10).cast("long")))
+    rejected.foreach { case (what, docs) =>
+      val dir = new java.io.File(tmp("graft-bloom-reject"), "seg").toString
+      intercept[IllegalArgumentException](StoreMaintenance.writeDocsWithBloom(docs, "vec_id", dir))
+      assert(!new java.io.File(dir).exists, s"$what: wrote $dir")
+    }
+    Seq("an eager checkpoint" -> ids.localCheckpoint(true),
+      "local rows" -> Seq(1L, 2L, 3L).toDF("vec_id")).foreach { case (what, docs) =>
+      val dir = new java.io.File(tmp("graft-bloom-accept"), "seg").toString
+      StoreMaintenance.writeDocsWithBloom(docs, "vec_id", dir)
+      assert(new java.io.File(dir, "_IDBLOOM").isFile, what)
+      assert(spark.read.parquet(dir).count() == docs.count(), what)
+    }
+  }
+
   test("superseded-c crash window (r15, ADVICE): a manifested older c " +
     "segment lingering past a later rewrite is IGNORED by readers (no " +
     "double-counted docs) and reaped by the next compaction entry") {

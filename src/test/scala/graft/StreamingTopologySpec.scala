@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,12 +34,15 @@ class StreamingTopologySpec extends AnyFunSuite {
     })
   }
 
-  /** Whether `df` reads a frame the cache manager holds. */
-  private def readsCache(df: DataFrame): Boolean = {
-    val qe = df.queryExecution
-    val cm = qe.sparkSession.sharedState.cacheManager
-    qe.analyzed.find(p => cm.lookupCachedData(qe.sparkSession, p).isDefined).isDefined
-  }
+  /** Ids of the RDDs whose blocks the block manager keeps. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of the checkpointed RDDs `df` reads. */
+  private def checkpointsRead(df: DataFrame): Seq[Int] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.id }
+
+  /** Whether `df` reads a checkpoint whose blocks are still kept. */
+  private def readsCheckpoint(df: DataFrame): Boolean = checkpointsRead(df).exists(persisted.contains)
 
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
@@ -47,7 +51,10 @@ class StreamingTopologySpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Array[Byte], Array[Byte])]
     val collected = scala.collection.mutable.Map[String, Seq[Row]]()
+    // (checkpoint id, whether its blocks were kept) per sink call
+    val read = new ConcurrentLinkedQueue[(Int, Boolean)]()
     def sink(name: String): DataFrame => Unit = { df =>
+      checkpointsRead(df).foreach(id => read.add(id -> persisted.contains(id)))
       collected.synchronized {
         collected(name) = collected.getOrElse(name, Seq.empty) ++ df.collect().toSeq
       }
@@ -62,6 +69,7 @@ class StreamingTopologySpec extends AnyFunSuite {
       "key".getBytes("UTF-8") -> beInt(-1),
       "key".getBytes("UTF-8") -> "10".getBytes("UTF-8"),
       "key".getBytes("UTF-8") -> beInt(2000000))
+    val before = persisted
     val q = StreamingTopology.start(records,
       StreamingTopology.Sinks(
         output = sink("output"),
@@ -79,11 +87,15 @@ class StreamingTopologySpec extends AnyFunSuite {
     assert(collected("deserDlt").head.getAs[Array[Byte]]("value").toSeq == "10".getBytes("UTF-8").toSeq)
     assert(collected("prodDlt").length == 1)
     assert(collected("prodDlt").head.getAs[Array[Byte]]("value").isEmpty)
+    // every branch read the batch's one checkpoint while it was kept, and
+    // the batch freed it
+    assert(read.size == 4 && read.asScala.map(_._1).toSet.size == 1 && read.asScala.forall(_._2),
+      read)
+    assert((persisted -- before).isEmpty, s"the batch left ${persisted -- before} persisted")
   }
 
   test("a DLT sink that throws on epoch N terminates the query with that cause; " +
     "a restart on the checkpoint redelivers epoch N byte-identically to all four sinks") {
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
     import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
     import graft.operators.ErrorHandlingTopology
@@ -96,18 +108,14 @@ class StreamingTopologySpec extends AnyFunSuite {
     // (run, epoch, sink) -> rendered records
     val seen = scala.collection.mutable.Map[(Int, Long, String), Seq[String]]()
     var run = 1
-    var routedPlan: Option[LogicalPlan] = None
+    var routedCheckpoint: Seq[(Int, Boolean)] = Nil
     def sink(name: String): DataFrame => Unit = { df =>
       val epoch = spark.sparkContext.getLocalProperty(MicroBatchExecution.BATCH_ID_KEY).toLong
       val rows = render(df)
       seen.synchronized { seen((run, epoch, name)) = rows }
       if (run == 1 && epoch == failEpoch && name == "production") {
-        // the branch reads the routed cache; remember which plan that is
-        val qe = df.queryExecution
-        val cm = qe.sparkSession.sharedState.cacheManager
-        routedPlan = qe.analyzed.collectFirst {
-          case p if cm.lookupCachedData(qe.sparkSession, p).isDefined => p
-        }
+        // the branch reads the routed checkpoint; remember which one that is
+        routedCheckpoint = checkpointsRead(df).map(id => id -> persisted.contains(id))
         throw boom
       }
     }
@@ -119,6 +127,7 @@ class StreamingTopologySpec extends AnyFunSuite {
       maxRequestSize = max, trigger = Trigger.ProcessingTime(0L))
 
     // run 1: epoch 0 commits, epoch 1 dies in the production DLT sink
+    val before = persisted
     val q1 = start()
     try {
       input.addData(epochData(0))
@@ -128,10 +137,10 @@ class StreamingTopologySpec extends AnyFunSuite {
     } finally q1.stop()
     assert(!q1.isActive)
     assert(causes(q1.exception.get).exists(_ eq boom), s"terminated by ${q1.exception}")
-    assert(routedPlan.isDefined, "the failing sink read no cached routed frame")
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    assert(classic.sharedState.cacheManager.lookupCachedData(classic, routedPlan.get).isEmpty,
-      "routed frame still cached after the failed epoch")
+    assert(routedCheckpoint.size == 1 && routedCheckpoint.head._2,
+      s"the failing sink read no kept routed checkpoint: $routedCheckpoint")
+    assert((persisted -- before).isEmpty,
+      s"routed checkpoint still kept after the failed epoch: ${persisted -- before}")
 
     // run 2 on the same checkpoint: epoch 1 is replayed, then epoch 2 runs
     run = 2
@@ -222,7 +231,7 @@ class StreamingTopologySpec extends AnyFunSuite {
       running.incrementAndGet()
       try {
         Thread.sleep(1500)
-        val cached = readsCache(df)
+        val cached = readsCheckpoint(df)
         df.collect()
         finished.add(name -> cached)
       } finally running.decrementAndGet()
@@ -238,7 +247,7 @@ class StreamingTopologySpec extends AnyFunSuite {
     finally q.stop()
     assert(running.get == 0, "a sink call outlived the failed batch")
     assert(finished.asScala.toMap == Map("output" -> true, "process" -> true),
-      "the slow calls must finish, reading the routed cache")
+      "the slow calls must finish, reading the routed checkpoint")
     // below Spark's own wrappers, the sink's exception itself
     val thrown = causes(q.exception.get).find(!_.isInstanceOf[SparkThrowable])
     assert(thrown.exists(t => (t eq boomDeser) || (t eq boomProduction)),
