@@ -287,9 +287,7 @@ object RelQueries {
     * dead-branch records (same split predicate as t2_q1/q2 — the
     * reference topology's routing), and the dead rate in ppm — the
     * dashboard query every dead-letter pipeline needs ("is the DLQ
-    * rate spiking this hour?"). One partial-combinable aggregate; in
-    * streaming form the same expression runs under a watermark
-    * (EventTimeOps.tumblingRollup shape). */
+    * rate spiking this hour?"). One partial-combinable aggregate. */
   def dlqHourly(spark: SparkSession, sfDir: String): DataFrame = {
     val nanosPerHour = 3600L * 1000000000L
     Tables.events(spark, sfDir)

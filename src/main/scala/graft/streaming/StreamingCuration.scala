@@ -76,36 +76,6 @@ object StreamingCuration {
       .select("ts", "doc_id", "text")
   }
 
-  /** Streaming CDC apply (r10) — the always-on twin of the batch
-    * MERGE audit ([[graft.relational.RelQueries.mergeUpsert]]):
-    * arriving change events (key, op, new payload) LEFT-join the
-    * STATIC base snapshot and resolve the SAME merge arms row-locally
-    * — insert / update / delete / noop / skip_absent with identical
-    * payload semantics (old payload on delete, new otherwise).
-    * Stateless on the stream side (the static relation re-reads per
-    * micro-batch, exactly [[admitStream]]'s layout); the batch form's
-    * `keep` arm has no streaming analogue by construction — it names
-    * base rows NO event touched, and an event-driven audit only emits
-    * for events (StreamingCurationSpec pins verdict agreement with
-    * the batch operator on every event-driven arm). At table-format
-    * scale the audited batch feeds the actual table rewrite in the
-    * same foreachBatch transaction. Stream shape:
-    * (ts: timestamp, key: bigint, op: string, new_price_c: bigint,
-    * new_status: string); base: (key, price_c, status). */
-  def cdcApplyStream(changes: DataFrame, base: DataFrame): DataFrame =
-    changes.join(base, Seq("key"), "left")
-      .select(col("ts"), col("key"),
-        when(col("price_c").isNull && col("op") === "D", "skip_absent")
-          .when(col("price_c").isNull, "insert")
-          .when(col("op") === "D", "delete")
-          .when(col("new_price_c") === col("price_c") &&
-            col("new_status") === col("status"), "noop")
-          .otherwise("update").as("action"),
-        when(col("op") === "D", coalesce(col("price_c"), col("new_price_c")))
-          .otherwise(col("new_price_c")).as("price_c"),
-        when(col("op") === "D", coalesce(col("status"), col("new_status")))
-          .otherwise(col("new_status")).as("status"))
-
   /** Streaming NEAR-DUP admit for text (r9, VERDICT r8 #8) — the
     * missing middle between [[admitStream]] (exact hash only) and
     * [[admitVectorStream]] (vectors): arriving documents are dropped
@@ -290,13 +260,13 @@ object StreamingCuration {
       .select(col("vec_id"), col("qb"), V.qnorm2(col("qb")).as("nb"))
       .where(col("nb") > 0)
     // NOT persisted, unlike the text gate's corpusBuckets — measured
-    // (tools/StreamBench, r9): the static side here is a cheap
-    // quantize + tiny aggregate, and caching it HALVED throughput
-    // (6.5k -> 3.2k rows/s; the cached relation flips the per-band
-    // join off its broadcast plan), while the text gate's
-    // md5-per-shingle pass gains +18% from its persist. Rebuild-per-
-    // batch is the right trade when the snapshot build is cheaper
-    // than the strategy distortion.
+    // (BASELINE.md, "Streaming near-dup admit gate throughput (r9)"):
+    // the static side here is a cheap quantize + tiny aggregate, and
+    // caching it HALVED throughput (6.5k -> 3.2k rows/s; the cached
+    // relation flips the per-band join off its broadcast plan), while
+    // the text gate's md5-per-shingle pass gains +18% from its persist.
+    // Rebuild-per-batch is the right trade when the snapshot build is
+    // cheaper than the strategy distortion.
     val corpusBanded = corpus.select(col("vec_id"),
         posexplode(array((0 until nBands).map(b =>
           V.signBucket(col("embedding"), b, bitsPB)): _*)))

@@ -76,10 +76,6 @@ class EdgeCasesSpec extends AnyFunSuite {
     // 5 vectors < nCodes=16: the codebook is just smaller, search runs
     assert(Similarity.knnIvfPq(fewEmb, nQueries = 2, k = 3,
       nCentroids = 4, nSub = 4).count() > 0)
-    // streaming funnel fold: empty event list is a no-op
-    val (s, hits) = graft.streaming.StreamFunnel.fold(1L,
-      graft.streaming.StreamFunnel.State(-1, -1, -1, Nil), Nil)
-    assert(hits.isEmpty && s.t_view == -1)
     // retention on an empty frame
     assert(graft.relational.RelQueries.retentionOf(
       Seq.empty[(Long, Long)].toDF("user_id", "ts")).count() == 0)

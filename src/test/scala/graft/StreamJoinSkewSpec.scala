@@ -1,57 +1,12 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.SkewJoin
-import graft.streaming.StreamJoins
 
 class StreamJoinSkewSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  private def ts(minute: Int) = new Timestamp(minute * 60000L)
-
-  test("clickAttribution: exact window semantics (batch)") {
-    val clicks = Seq((1L, ts(0), 100L), (1L, ts(50), 101L), (2L, ts(10), 102L))
-      .toDF("user_id", "ts", "event_id")
-    val purchases = Seq((1L, ts(55), 200L), (2L, ts(90), 201L))
-      .toDF("user_id", "ts", "event_id")
-    val out = StreamJoins.clickAttribution(clicks, purchases).collect()
-      .map(r => (r.getLong(0), r.getLong(3))).toSet
-    // purchase 200 at t=55: clicks at 0 (outside 1h? 55m <= 60m -> IN)
-    // and 50 (in); purchase 201 at t=90: click at 10 is 80m before -> OUT
-    assert(out == Set((200L, 100L), (200L, 101L)))
-  }
-
-  test("clickAttribution joins across two MemoryStreams with state eviction") {
-    implicit val sqlCtx = spark.sqlContext
-    val cs = MemoryStream[(Long, Timestamp, Long)]
-    val ps = MemoryStream[(Long, Timestamp, Long)]
-    val q = StreamJoins.clickAttribution(
-        cs.toDF().toDF("user_id", "ts", "event_id"),
-        ps.toDF().toDF("user_id", "ts", "event_id"))
-      .writeStream.format("memory").queryName("attrib")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // minute 1, not 0: epoch-0 event time sits exactly at the
-      // engine's initial watermark and is discarded as late
-      cs.addData((1L, ts(1), 100L))
-      ps.addData((1L, ts(30), 200L))
-      q.processAllAvailable()
-      cs.addData((1L, ts(40), 101L))
-      ps.addData((1L, ts(45), 201L))
-      q.processAllAvailable()
-      val got = spark.table("attrib").collect()
-        .map(r => (r.getLong(0), r.getLong(3))).toSet
-      // 200@30 <- click 100@0; 201@45 <- clicks 100@0 and 101@40
-      assert(got == Set((200L, 100L), (201L, 100L), (201L, 101L)))
-    } finally q.stop()
-  }
 
   test("saltedInner == plain inner join on skewed data") {
     val probe = (1 to 5000).map(i => (if (i % 10 == 0) 7L else i.toLong, i))

@@ -364,50 +364,6 @@ class StreamingCurationSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("cdcApplyStream: verdicts and payloads agree with the batch " +
-    "MERGE audit on every event-driven arm (r10)") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
-    val o = graft.relational.Tables.orders(spark, sf)
-    // the SAME residue-class derivation rel_merge_upsert declares
-    val base = o.where(col("o_orderkey") % 5 =!= 4)
-      .select(col("o_orderkey").as("key"),
-        floor(col("o_totalprice") * 100).cast("long").as("price_c"),
-        col("o_orderstatus").as("status"))
-    val changes = o.where(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey").as("key"),
-        when(col("o_orderkey") % 12 === 2, "D").otherwise("U").as("op"),
-        (floor(col("o_totalprice") * 100).cast("long") +
-          when(col("o_orderkey") % 6 === 0, 1000L).otherwise(0L))
-          .as("new_price_c"),
-        col("o_orderstatus").as("new_status"))
-      .collect().map(r => (ts(1), r.getLong(0), r.getString(1),
-        r.getLong(2), r.getString(3)))
-    val mem = MemoryStream[(Timestamp, Long, String, Long, String)]
-    val q = StreamingCuration.cdcApplyStream(
-        mem.toDF().toDF("ts", "key", "op", "new_price_c", "new_status"),
-        base)
-      .writeStream.format("memory").queryName("cdc_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(changes.toSeq)
-      q.processAllAvailable()
-      val got = spark.table("cdc_out").collect()
-        .map(r => r.getLong(1) -> ((r.getString(2), r.getLong(3),
-          r.getString(4)))).toMap
-      val want = graft.relational.RelQueries.mergeUpsert(spark, sf)
-        .where(col("action") =!= "keep").collect()
-        .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2),
-          r.getString(3)))).toMap
-      assert(got.size == want.size)
-      assert(got == want)
-      // every event-driven arm is populated in the parity set
-      assert(got.values.map(_._1).toSet ==
-        Set("insert", "update", "noop", "delete", "skip_absent"))
-    } finally q.stop()
-  }
-
   test("classifyStream scores arrivals with the batch-fit model; " +
     "tie-break and unseen-token laws match the batch classifier") {
     implicit val sqlCtx = spark.sqlContext
