@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.codecs
 import graft.operators.ErrorHandlingTopology
-import graft.relational.{ExtQueries, Queries}
+import graft.relational.{ExtQueries, Queries, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -18,7 +18,7 @@ object SparkEntry {
     * then routed through decode → wrap-map → split → size guard.
     * Returns per-branch record counts (rows > 0 always). */
   def entry(spark: SparkSession): DataFrame = {
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val events = Tables.events(spark, "/root/testdata/sf0.001")
     val records = events.select(
       col("event_id").cast("string").cast("binary").as("key"),
       when(col("event_type") === "error", col("props").cast("binary"))

@@ -13,10 +13,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object Shutdown {
   /** Await the query; on failure stop the session and rethrow. */
   def awaitOrShutdown(spark: SparkSession, query: StreamingQuery): Unit =
+    awaitOrShutdown(query, () => spark.stop())
+
+  /** Await the query; on failure run `stop` and rethrow the query's
+    * failure. A failure of `stop` itself is attached to it as a
+    * suppressed exception, so the cause the query died of is the one
+    * that surfaces. */
+  def awaitOrShutdown(query: StreamingQuery, stop: () => Unit): Unit =
     try query.awaitTermination()
     catch {
       case e: Throwable =>
-        try spark.stop() finally ()
+        try stop() catch { case s: Throwable => e.addSuppressed(s) }
         throw e
     }
 }
