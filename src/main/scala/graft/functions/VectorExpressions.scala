@@ -111,7 +111,7 @@ case class QDotLong(left: Expression, right: Expression)
 
 /** Signature-agreement count (see [[VectorNative.sigAgree]]) — the
   * verify-stage kernel of the minhash/OPH estimator families
-  * (Dedup.estimated, StreamingCuration.ophEstPpm). The HOF form it
+  * (Dedup.estimated, StoreMaintenance.ophEstPpm). The HOF form it
   * replaces is CodegenFallback: one interpreted closure dispatch per
   * slot per candidate pair, K=64 per pair across every *_recall /
   * calibration / threshold-curve rung. Null only on null INPUT

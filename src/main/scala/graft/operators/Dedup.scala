@@ -252,8 +252,8 @@ object Dedup {
     * rows, dd_minhash_calibration, the bands-sweep table) was
     * derived on the affine family. The batch blocker keeps the
     * family its measurements pin; OPH is deployed where signature
-    * cost IS the bottleneck — the per-arrival streaming admit gate
-    * ([[graft.streaming.StreamingCuration.admitNearDupStream]] signs
+    * cost IS the bottleneck — the per-batch store fold
+    * ([[graft.streaming.StoreMaintenance.foldTextBatch]] signs
     * with textNative.oph_sig) — and remains declared (dd_oph) with
     * byte-exact oracle parity for corpora that want it. */
   def minhashLshAuto(docs: DataFrame, shingleN: Int = 3,
@@ -286,27 +286,13 @@ object Dedup {
     * a real store its size RUNS the auto arm, so the declared
     * upsert exercises it too. At the driver SFs (N < 10⁴) auto is
     * the 8×2 point — gate hashes unchanged by construction
-    * (KnnRebandSpec pins the equality); at the 10× probe auto flips
+    * (dd_lsh_upsert's oracle pins the equality); at the 10× probe auto flips
     * the store to 4×4 and the oracle derives the same arm. */
   def minhashLshUpsert(docs: DataFrame, shingleN: Int = 3,
                        splitMod: Int = 10): DataFrame = {
     val sigs = minhashSignatures(docs, shingleN).localCheckpoint(true)
-    val r = autoBandRows(sigs.count())
-    upsertFromSigs(sigs, PH.MinhashK / r, r, splitMod)
-  }
-
-  /** [[minhashLshUpsert]] at a FIXED arm — the spec surface that
-    * pins gate-hash stability (auto == 8×2 below 10⁴) and drives the
-    * lifecycle at explicit widths. */
-  private[graft] def minhashLshUpsertWith(docs: DataFrame,
-      shingleN: Int = 3, bands: Int = DefaultBands,
-      rowsPerBand: Int = DefaultRowsPerBand,
-      splitMod: Int = 10): DataFrame =
-    upsertFromSigs(minhashSignatures(docs, shingleN).localCheckpoint(true),
-      bands, rowsPerBand, splitMod)
-
-  private def upsertFromSigs(sigs: DataFrame, bands: Int,
-      rowsPerBand: Int, splitMod: Int): DataFrame = {
+    val rowsPerBand = autoBandRows(sigs.count())
+    val bands = PH.MinhashK / rowsPerBand
     val isNew = pmod(col("doc_id"), lit(splitMod)) === 0
     val stored = lshPairsFrom(
       bandsFrom(sigs.where(!isNew), bands, rowsPerBand))
@@ -358,55 +344,12 @@ object Dedup {
     * r → 2r migration iff both half-bands 2j and 2j+1 of some wide
     * band j are present. Returns the surviving distinct pairs. */
   private def rebandSurvivors(pairBands: DataFrame): DataFrame =
-    rebandRows(pairBands).select("doc_a", "doc_b").distinct()
-
-  /** [[rebandSurvivors]]' band-row form: the MIGRATED store's
-    * (doc_a, doc_b, band) co-occurrence rows at arm 2r, derived from
-    * the stored rows at arm r ALONE (wide band j present ⟺ half
-    * bands 2j and 2j+1 both present) — the closure property that
-    * lets migrations COMPOUND: the output is the same shape as the
-    * input, so a second r→2r step consumes the first's result
-    * ([[minhashRebandChain]]). */
-  private def rebandRows(pairBands: DataFrame): DataFrame =
     pairBands
       .groupBy(col("doc_a"), col("doc_b"),
         expr("band div 2").as("band"))
       .agg(count(lit(1)).as("halves"))
       .where(col("halves") === 2)
-      .select("doc_a", "doc_b", "band")
-
-  /** CHAINED banding migrations (r14, VERDICT r13 #5): a decade-long
-    * store crosses SEVERAL arm boundaries, and the refinement
-    * argument says migrations COMPOUND — this pins it. Build the
-    * store at r = autoBandRows(N), then apply `steps` successive
-    * r → 2r migrations, each consuming the PREVIOUS migration's band
-    * rows and the ORIGINAL carried estimates (scores never re-run:
-    * pairs only shrink). KnnRebandSpec proves the chain ≡ the
-    * from-scratch blocker at the FINAL arm at two gate SFs; the
-    * probe leg is recorded in BASELINE.md. Each step is linear in
-    * the store it consumes — the migration cost never grows back to
-    * a rebuild no matter how many boundaries a store lifetime
-    * crosses. */
-  private[graft] def minhashRebandChain(docs: DataFrame, steps: Int = 2,
-      shingleN: Int = 3): DataFrame = {
-    val sigs = minhashSignatures(docs, shingleN).localCheckpoint(true)
-    val r0 = autoBandRows(sigs.count())
-    val cand0 = candRowsAll(bandsFrom(sigs, PH.MinhashK / r0, r0))
-      .localCheckpoint(true)
-    val est = estimated(
-      cand0.select("doc_a", "doc_b", "sig_a", "sig_b").distinct())
-      .localCheckpoint(true)
-    var pb = cand0.select("doc_a", "doc_b", "band")
-    var r = r0
-    var i = 0
-    while (i < steps && r < PH.MinhashK) {
-      pb = rebandRows(pb).localCheckpoint(true)
-      r *= 2; i += 1
-    }
-    pb.select("doc_a", "doc_b").distinct()
-      .join(est, Seq("doc_a", "doc_b"))
-      .orderBy("doc_a", "doc_b")
-  }
+      .select("doc_a", "doc_b").distinct()
 
   /** The full text-store LIFECYCLE as ONE oracle-checked composite
     * (r13 — VERDICT r12 #2): BUILD the near-dup store over an

@@ -481,46 +481,6 @@ object Similarity {
     }
   }
 
-  /** CHAINED width migrations (r14, VERDICT r13 #5 — the vector twin
-    * of [[graft.operators.Dedup.minhashRebandChain]]): build the
-    * anchored store at w = autoBits(N), then apply `steps` successive
-    * w → w+1 migrations. Each step's extension-bit filter consumes
-    * the PREVIOUS step's band rows (the anchored refinement is
-    * closed: surviving rows at w+1 are the same (pair, band) shape),
-    * and the stored scores are carried through every boundary —
-    * re-scored NEVER, because pairs(w') ⊆ pairs(w) at every step.
-    * Per-step cost: one row-local extension projection over the
-    * corpus + one id-keyed join over the (shrinking) stored rows.
-    * KnnRebandSpec proves the chain ≡ the from-scratch anchored
-    * graph at the FINAL width at two gate SFs; the probe leg is
-    * recorded in BASELINE.md. */
-  private[graft] def knnGraphRebandChain(embeddings: DataFrame,
-      steps: Int = 2, k: Int = 4, nBands: Int = 4,
-      targetOccupancy: Long = 128L): DataFrame = {
-    val base = quantized(embeddings).localCheckpoint(true)
-    val w0 = autoBits(base.count(), targetOccupancy)
-    var pb = pairBandsFrom(vectorBandsAnchored(embeddings, nBands, w0))
-      .localCheckpoint(true)
-    val scores = scorePairs(
-      pb.select("vec_a", "vec_b").distinct(), base).localCheckpoint(true)
-    var w = w0
-    var i = 0
-    while (i < steps && w < AnchorStride) {
-      val ext = extBitsOf(embeddings, nBands, w, 1)
-      pb = pb
-        .join(ext.select(col("vec_id").as("vec_a"), col("band"),
-          col("ext").as("ea")), Seq("vec_a", "band"))
-        .join(ext.select(col("vec_id").as("vec_b"), col("band"),
-          col("ext").as("eb")), Seq("vec_b", "band"))
-        .where(col("ea") === col("eb"))
-        .select("vec_a", "vec_b", "band")
-        .localCheckpoint(true)
-      w += 1; i += 1
-    }
-    graphFromScored(pb.select("vec_a", "vec_b").distinct()
-      .join(scores, Seq("vec_a", "vec_b")), k)
-  }
-
   /** Normalized (vec_a < vec_b) candidate rows of a band table with
     * the band kept — the store's refinement key. Within one band a
     * pair co-buckets at most once, so rows are already distinct. */
@@ -1531,29 +1491,6 @@ object Similarity {
       .where(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "dot_q")
       .orderBy("query_id", "rank")
-  }
-
-  /** Per-label integer floor-mean centroids of the full corpus —
-    * the BASELINE side of the streaming drift monitor
-    * ([[graft.streaming.StreamingCuration.driftStream]]): (label,
-    * cv: array<bigint>, n). Same quantization and floor-of-IEEE-
-    * quotient mean as [[driftReport]]; zero-direction centroids
-    * excluded (no drift direction to compare against). */
-  def labelCentroids(embeddings: DataFrame): DataFrame = {
-    val base = quantized(embeddings)
-      .join(embeddings.select("vec_id", "label"), "vec_id")
-      .select(col("label"), posexplode(col("qe")))
-    val cent = base.groupBy("label", "pos")
-      .agg(sum("col").as("s"), count(lit(1)).as("n"))
-      .select(col("label"), col("pos"),
-        floor(col("s") / col("n")).cast("long").as("c"), col("n"))
-    val packed = cent.groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          e => e.getField("c")).as("cv"),
-        max("n").as("n"))
-    val n2 = aggregate(zip_with(col("cv"), col("cv"), (x, y) => x * y),
-      lit(0L), (acc, v) => acc + v)
-    packed.where(n2 > 0).select("label", "cv", "n")
   }
 
   /** Embedding drift report (r11): per label, the cosine between the

@@ -1415,11 +1415,9 @@ object TextAnalysis {
     * than the column-pruned scans it would save (the checkpoint-
     * vs-rescan rule the semDedup assignment applies in the OPPOSITE
     * direction, because there the cached side is model-bounded). */
-  /** The classifier's FIT half, exposed on its own so the stream
-    * path ([[graft.streaming.StreamingCuration.classifyStream]]) can
-    * apply a batch-fit model to arriving docs — the batch-fit /
-    * stream-score loop. Returns (w, label, weight_ppm): class-share
-    * ppm of each training token, one row per (token, class). */
+  /** The classifier's FIT half. Returns (w, label, weight_ppm):
+    * class-share ppm of each training token, one row per
+    * (token, class). */
   def sourceModel(docs: DataFrame, fold: Int = 5): DataFrame = {
     val train = Partitioning.spread(docs)
       .where(pmod(col("doc_id"), lit(fold)) =!= 0)

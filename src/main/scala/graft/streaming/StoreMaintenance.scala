@@ -2,36 +2,37 @@ package graft.streaming
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 import graft.functions.{PortableHash => PH, VectorOps => V}
 
-/** Streaming store MAINTENANCE (r14, VERDICT r13 #3) — the loop the
-  * admission gates were missing: [[StreamingCuration.admitNearDupStream]]
-  * and [[StreamingCuration.admitVectorStream]] gate arrivals against a
-  * STATIC corpus snapshot rebuilt per restart, while the incremental
-  * stores ([[graft.operators.Dedup.minhashLshUpsert]],
-  * [[graft.operators.Similarity.knnGraphUpsert]]) existed only as
-  * batch queries. This module wires the production ingest topology:
-  * a `foreachBatch` sink that (1) admits each micro-batch against the
-  * PERSISTED store, (2) folds the admitted rows' signatures/band rows
-  * back into that store — so the snapshot the NEXT batch gates
-  * against IS the maintained store, with no per-batch corpus re-sign
-  * and no per-restart rebuild.
+/** Persisted near-dup and k-NN store FOLDS — the transaction each
+  * declared replay runs per batch ([[maintainedTextStoreReplay]],
+  * [[maintainedVecStoreReplay]], [[maintainedKnnGraphReplay]]; their
+  * oracles prove the folded store against the sequential batch
+  * semantics). One fold (1) admits a batch against the PERSISTED store
+  * and (2) appends the admitted rows' signatures/band rows back into
+  * it — so the store the NEXT batch gates against is the folded store,
+  * with no per-batch corpus re-sign. The batch twins are the
+  * incremental stores [[graft.operators.Dedup.minhashLshUpsert]] and
+  * [[graft.operators.Similarity.knnGraphUpsert]].
   *
-  * Exactly-once under the engine's at-least-once `foreachBatch`
-  * replay: each batch commits to its own directory with the parquet
-  * `_SUCCESS` marker as the transaction boundary — a replayed batchId
-  * whose marker exists is a no-op, and a replay after a mid-write
-  * crash recomputes the SAME admitted set (the uncommitted partial is
-  * excluded from the store it reads) and overwrites deterministically.
-  * StreamingCurationSpec pins the chain: stream-maintained store ≡
-  * the sequential batch-fold oracle after N micro-batches, across a
-  * kill/resume, and fold-replay idempotence.
+  * Segment layout: every fold writes `b<batchId>` dirs under
+  * `storeDir/docs` (the admitted records plus their `_IDBLOOM` id
+  * digest), `storeDir/graph` (the k-NN fold's graph delta) and
+  * `storeDir/rows` (the band rows). A batch is COMMITTED when its
+  * `rows/b<batchId>/_SUCCESS` parquet marker exists; that marker is
+  * the transaction boundary, and readers see only committed batches'
+  * dirs of every kind. Docs and graph land BEFORE the rows, so a
+  * crash-orphaned docs or graph dir (no rows marker) is invisible.
+  * Exactly-once per batch id: a committed id is a no-op, and a replay
+  * after a mid-write crash recomputes the SAME admitted set (the
+  * uncommitted partial is excluded from the store it reads) and
+  * overwrites deterministically. This is the recompute-from-source
+  * fault model: the store needs no recovery protocol of its own.
   *
   * Scale shape per batch (r15): ONE |batch|-sized signature
   * projection (row-local), a broadcast semi-join that prunes the
@@ -42,113 +43,43 @@ import graft.functions.{PortableHash => PH, VectorOps => V}
   * read partition-prunable too) — |bands| joins against the ONE
   * checkpointed batch-bounded lookup, and a |admitted|-sized
   * append. The redelivery guard — the one remaining store-sized read
-  * of the r15 shape — is digest-pruned since r16 ([[writeIdBloom]]):
+  * of the r15 shape — is digest-pruned since r16 ([[writeDocsWithBloom]]):
   * per-segment id blooms are probed first and the store is read only
   * on a possible hit, so a no-redelivery fold performs ZERO
   * store-sized work. Corpus-sized work never re-executes: signatures
   * are computed once, on admission, and carried by the store — the
-  * [[graft.operators.Dedup.minhashLshUpsert]] pay-per-batch argument
-  * under the streaming engine. Within-batch self-duplicates are NOT
-  * gated (the stream-gate convention: the gate checks arrivals
-  * against the STORE; intra-batch pairs land and are the batch
-  * store's near-dup rows, exactly as the sequential batch fold would
-  * leave them). Banding/width is FIXED per store — crossing a growth
-  * boundary is the reband migration's job
-  * ([[graft.operators.Dedup.minhashStoreLifecycle]] /
-  * [[graft.operators.Similarity.knnStoreLifecycle]] prove it), run as
-  * an offline store rewrite between streaming generations.
+  * [[graft.operators.Dedup.minhashLshUpsert]] pay-per-batch argument.
+  * Within-batch self-duplicates are NOT gated (the gate checks
+  * arrivals against the STORE; intra-batch pairs land and are the
+  * batch store's near-dup rows, exactly as the sequential batch fold
+  * would leave them). Banding/width is FIXED per store at creation
+  * and self-described by its rows ([[storeArm]], [[vecStoreWidth]]).
   *
   * Directory transactionality uses the local filesystem's atomic
   * rename semantics via parquet `_SUCCESS` (the sandbox deployment);
   * a cluster deployment swaps the same protocol onto its DFS/table
-  * format (the foreachBatch-transaction pattern is unchanged). */
+  * format. */
 object StoreMaintenance {
 
   private def rowsDir(storeDir: String, batchId: Long): String =
     s"$storeDir/rows/b$batchId"
   private def docsDir(storeDir: String, batchId: Long): String =
     s"$storeDir/docs/b$batchId"
-
-  /** Committed per-batch segment dirs under `storeDir/<kind>`:
-    * `b<id>` (one fold's output) or `c<id>` (a [[compactStore]]
-    * rewrite consolidating every batch ≤ id). */
-  private def segDirs(storeDir: String, kind: String): Seq[File] = {
+  /** Committed `b<id>` dirs under `storeDir/<kind>`, ascending by id:
+    * the kind's own `_SUCCESS` AND the batch's rows marker (docs and
+    * graph land before the transaction commits, so an orphaned
+    * docs/bN must stay invisible until the rows marker exists). */
+  private def readerDirs(storeDir: String, kind: String): Seq[String] = {
     val d = new File(s"$storeDir/$kind")
     if (!d.isDirectory) Seq.empty
     else d.listFiles().toSeq.filter(f => f.isDirectory &&
-      (f.getName.startsWith("b") || f.getName.startsWith("c")) &&
-      new File(f, "_SUCCESS").exists).sortBy(_.getName.drop(1).toLong)
+        f.getName.startsWith("b") && new File(f, "_SUCCESS").exists &&
+        isCommitted(storeDir, f.getName.drop(1).toLong))
+      .sortBy(_.getName.drop(1).toLong).map(_.getPath)
   }
-
-  /** Batch ids a compaction segment covers (its `COVERED` manifest,
-    * one id per line — written before the covered `b` dirs are
-    * removed, so a batch id stays committed across the rewrite). */
-  private def coveredIds(storeDir: String): Set[Long] =
-    segDirs(storeDir, "rows").filter(_.getName.startsWith("c"))
-      .flatMap { f =>
-        val m = new File(f, "_COVERED")
-        if (!m.exists) Seq.empty
-        else java.nio.file.Files.readAllLines(m.toPath)
-          .toArray(Array.empty[String]).toSeq
-          .filter(_.nonEmpty).map(_.toLong)
-      }.toSet
 
   private def isCommitted(storeDir: String, batchId: Long): Boolean =
-    new File(rowsDir(storeDir, batchId), "_SUCCESS").exists ||
-      coveredIds(storeDir).contains(batchId)
-
-  /** All committed batch ids, ascending — live `b` dirs plus every
-    * id a compaction manifest covers. */
-  def committedBatches(storeDir: String): Seq[Long] = {
-    val live = segDirs(storeDir, "rows")
-      .filter(_.getName.startsWith("b"))
-      .map(_.getName.drop(1).toLong)
-    (live ++ coveredIds(storeDir)).distinct.sorted
-  }
-
-  /** The newest manifested compaction/reband segment id — the ONLY
-    * `c` segment readers consume. An older manifested `c` dir can
-    * linger across [[compactStore]]/[[rebandTextStore]]'s crash
-    * window between the new manifest landing and the superseded dir's
-    * delete; its id set is provably a subset of the newest manifest
-    * (every compaction's manifest is coveredIds ∪ live at write
-    * time), so reading ONLY the newest is lossless — and reading
-    * both would double-count docs forever (r14 ADVICE). */
-  private def maxManifestedC(storeDir: String): Option[Long] =
-    segDirs(storeDir, "rows").filter(f => f.getName.startsWith("c") &&
-        new File(f, "_COVERED").exists)
-      .map(_.getName.drop(1).toLong) match {
-      case Seq() => None
-      case ids => Some(ids.max)
-    }
-
-  /** The segment dirs a reader consumes: the NEWEST manifested
-    * compaction segment plus live `b` dirs whose BATCH committed
-    * (the rows `_SUCCESS` / a covering manifest — NOT the kind's own
-    * marker: docs and graph land before the transaction commits, so
-    * an orphaned docs/bN must stay invisible until the rows marker
-    * exists) and that no manifest covers. A crash window where a
-    * covered `b` dir still lingers double-counts its rows — harmless
-    * by construction: every consumer has idempotent candidate
-    * semantics (`exists` verifies, `distinct` pair/base sets), which
-    * the compaction spec pins. A lingering SUPERSEDED `c` dir is NOT
-    * harmless the same way (its doc rows would double-count through
-    * every later rewrite), so those are excluded here and reaped by
-    * [[compactRecovery]]. */
-  private def readerDirs(storeDir: String, kind: String): Seq[String] = {
-    val covered = coveredIds(storeDir)
-    val newestC = maxManifestedC(storeDir)
-    segDirs(storeDir, kind).filter { f =>
-      val id = f.getName.drop(1).toLong
-      // a c segment counts only once its rows twin carries the
-      // manifest — the compaction/reband COMMIT point (a manifest-less
-      // c dir is an interrupted rewrite's leftover) — and only the
-      // NEWEST such segment (older ones are superseded subsets)
-      if (f.getName.startsWith("c")) newestC.contains(id)
-      else !covered.contains(id) && isCommitted(storeDir, id)
-    }.map(_.getPath)
-  }
-
+    new File(rowsDir(storeDir, batchId), "_SUCCESS").exists
   private def readCommitted(spark: SparkSession, storeDir: String,
       kind: String): Option[DataFrame] = {
     val parts = readerDirs(storeDir, kind)
@@ -157,9 +88,9 @@ object StoreMaintenance {
     // bits/nbands) mixed with new-fold segments must not let one
     // file's footer pick the schema — merged, legacy rows carry null
     // width columns (never consulted: vecStoreWidth reads per-dir and
-    // skips null rows) instead of a consolidation silently DROPPING
-    // the columns. Segment count is bounded by compactEvery, so the
-    // footer merge is a constant-cost read option, not a scan.
+    // skips null rows) instead of one footer silently DROPPING the
+    // columns. The footer merge reads one footer per segment, not the
+    // data.
     else Some(spark.read.option("mergeSchema", "true").parquet(parts: _*))
   }
 
@@ -173,15 +104,13 @@ object StoreMaintenance {
     * probes digests first and scans ONLY segments whose digest might
     * contain a batch id: a Bloom filter has no false negatives, so
     * the guard's RESULT is identical to the scanning form (spec-
-    * pinned across a compaction and a migration) — a false positive
+    * pinned against a store with its digests deleted) — a false positive
     * merely scans one segment for nothing. Steady state (no
     * redelivery): O(segments) digest probes per fold, ZERO store
     * reads. A segment without a sidecar (a store written before r16)
     * is always scanned — exactly the behavior that store was built
-    * with. Digest memory is ~10 bits per committed id, read
-    * per-segment on the driver; at warehouse scale the sidecar rides
-    * the same segment lifecycle as the data (compaction and the
-    * reband migrations rebuild it with their rewrite, below). */
+    * with. Digest memory is ~29 bits per committed id ([[IdBloomFpp]]),
+    * read per-segment on the driver. */
   /** Per-ID digest FPR. The guard probes a segment with the batch's
     * WHOLE distinct-id set, so the per-segment false-suspect rate
     * COMPOSITES: P(suspect) = 1 − (1−fpp)^B ≈ B·fpp. At 1e-2 a
@@ -191,21 +120,6 @@ object StoreMaintenance {
     * about one spurious segment scan per few hundred folds — for
     * ~29 bits/id of sidecar (3.6 bytes/id, vs 1.2 at 1%). */
   private val IdBloomFpp = 1e-6
-
-  private def writeIdBloom(ids: DataFrame, idCol: String,
-                           dir: String): Unit = {
-    val n = ids.count()
-    // an EMPTY segment (a fully-redelivered batch admits nothing)
-    // gets an explicit contains-nothing filter — the stat aggregate
-    // returns a null buffer over zero rows
-    val bf =
-      if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L)
-      else ids.stat.bloomFilter(idCol, n, IdBloomFpp)
-    val out = java.nio.file.Files.newOutputStream(
-      java.nio.file.Paths.get(dir, "_IDBLOOM"))
-    try bf.writeTo(out) finally out.close()
-  }
-
   /** Write a docs segment AND its `_IDBLOOM` sidecar under the fold
     * write-ordering contract (segment parquet first, sidecar second,
     * commit marker elsewhere/later), with the segment's row count
@@ -266,7 +180,7 @@ object StoreMaintenance {
   }
 
   /** The stored ids that might collide with `probeIds`, digest-pruned
-    * to suspect segments ([[writeIdBloom]]). None ⇔ every committed
+    * to suspect segments ([[writeDocsWithBloom]]). None ⇔ every committed
     * docs segment's digest rules the whole batch out — the guard
     * reads NOTHING. `probeIds` is the same batch-distinct id set the
     * guard's anti-join already broadcasts (driver-scale by the
@@ -292,263 +206,10 @@ object StoreMaintenance {
     spark.createDataset(ids.toSeq)(
       org.apache.spark.sql.Encoders.scalaLong).toDF(idCol)
 
-  /** COMPACT a maintained store (r14): consolidate every live
-    * per-batch dir into one `c<maxId>` segment per kind (rows, docs,
-    * and the latest graph snapshot when present), so a year of
-    * micro-batches doesn't leave a year of directories for every
-    * fold to list and read. Crash-safe by ordering, with NO
-    * correctness window:
-    *  1. the consolidated parquet segments land first (`_SUCCESS`
-    *     from the write) — until the manifest exists they merely
-    *     DOUBLE-COUNT with the live dirs, which the idempotent
-    *     candidate semantics absorb;
-    *  2. the `COVERED` manifest commits the compaction — covered ids
-    *     stay committed (replay no-ops) even after their dirs go;
-    *  3. the covered `b` dirs are deleted last (a crash mid-delete
-    *     just leaves harmless double-counted leftovers for the next
-    *     compaction to remove).
-    * At table-format scale this is the same protocol the format's
-    * OPTIMIZE/rewrite op runs; here it is spelled out on parquet
-    * dirs. Returns the number of batch dirs consolidated. */
+  /** Recursive delete: the replays reap their temp store. */
   private def rm(f: File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm)
     f.delete(); ()
-  }
-
-  /** Remove crash leftovers of an interrupted [[compactStore]] /
-    * [[rebandTextStore]]: (a) a `c` dir with no `_COVERED` manifest
-    * in its rows twin is parquet that landed without its commit —
-    * clearing it keeps a retry's overwrite target out of its own
-    * read set (Spark refuses to overwrite a path it reads from) and
-    * stops the leftover's duplicated rows being BAKED into the next
-    * segment permanently; (b) a manifested `c` dir OLDER than the
-    * newest manifested one was superseded by a later rewrite whose
-    * delete didn't finish (the r14-ADVICE crash window between the
-    * new manifest landing and the old dir's removal) — readers
-    * already ignore it ([[readerDirs]]), this reaps it; (c) a `b` dir
-    * a manifest COVERS is the same window one step earlier (its id
-    * stays committed through the manifest) — reaping it here keeps a
-    * compaction RETRY from recomputing `last` as the id of the very
-    * `c` segment it would then read AND overwrite (r15 review: that
-    * shape crash-looped the auto-compacting sink on every restart). */
-  private def compactRecovery(storeDir: String): Unit = {
-    val newestC = maxManifestedC(storeDir)
-    val covered = coveredIds(storeDir)
-    Seq("rows", "docs", "graph").foreach { kind =>
-      segDirs(storeDir, kind).filter { f =>
-        val id = f.getName.drop(1).toLong
-        if (f.getName.startsWith("c")) {
-          val manifested =
-            new File(s"$storeDir/rows/${f.getName}/_COVERED").exists
-          !manifested || newestC.exists(_ > id)
-        } else covered.contains(id)
-      }.foreach(rm)
-    }
-  }
-
-  def compactStore(spark: SparkSession, storeDir: String): Int = {
-    recoverReband(storeDir)
-    compactRecovery(storeDir)
-    val kindsAll = Seq("rows", "docs", "graph")
-    val live = segDirs(storeDir, "rows").filter(_.getName.startsWith("b"))
-      .map(_.getName.drop(1).toLong)
-    if (live.size <= 1) return 0
-    val last = live.max
-    val kinds = kindsAll.filter(k => segDirs(storeDir, k).nonEmpty)
-    kinds.foreach { kind =>
-      if (kind == "graph") {
-        // the consolidated graph is the RESOLVED current graph (r16:
-        // per-batch graph segments are DELTAS, so no single dir is
-        // the whole graph any more); the c segment is total, so it
-        // shadows every covered delta per node
-        knnGraphCurrent(spark, storeDir).foreach(_.write.mode("overwrite")
-          .parquet(s"$storeDir/graph/c$last"))
-      } else {
-        val src = readerDirs(storeDir, kind)
-        // mergeSchema: legacy segments consolidated with new-fold ones
-        // must not drop the width columns (r16, ADVICE)
-        spark.read.option("mergeSchema", "true").parquet(src: _*)
-          .write.mode("overwrite").parquet(s"$storeDir/$kind/c$last")
-        if (kind == "docs") {
-          // the consolidated segment's id digest, recomputed from the
-          // rewrite (covers legacy inputs that never had one) — landed
-          // before the manifest, so a manifested c always has it
-          val c = spark.read.parquet(s"$storeDir/docs/c$last")
-          val idCol = if (c.columns.contains("doc_id")) "doc_id" else "vec_id"
-          writeIdBloom(c.select(idCol), idCol, s"$storeDir/docs/c$last")
-        }
-      }
-    }
-    val manifest = (coveredIds(storeDir) ++ live).toSeq.sorted
-      .mkString("", "\n", "\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$storeDir/rows/c$last/_COVERED"), manifest)
-    kinds.foreach { kind =>
-      live.foreach(i => rm(new File(s"$storeDir/$kind/b$i")))
-      // a previous compaction's c dir is superseded by the new one
-      segDirs(storeDir, kind).filter(f => f.getName.startsWith("c") &&
-        f.getName.drop(1).toLong < last).foreach(rm)
-    }
-    live.size
-  }
-
-  private def tmpRebandDir(storeDir: String, kind: String): String =
-    s"$storeDir/$kind/.tmp_reband"
-
-  /** Finish or roll back an interrupted [[rebandTextStore]]: the rows
-    * tmp segment is the COMMIT journal — complete (parquet `_SUCCESS`
-    * + `_COVERED` + `_TARGET`) means the migration is authoritative,
-    * so remove any stale targets and rename both kinds forward;
-    * incomplete means roll both tmps back. Every store entry point
-    * calls this; it is a bare File.exists when nothing is pending. */
-  private def recoverReband(storeDir: String): Unit = {
-    val rowsTmp = new File(tmpRebandDir(storeDir, "rows"))
-    // rows LAST: the rows tmp IS the journal, and its rename is the
-    // commit point — renaming it first would destroy the journal
-    // while docs/graph still sit in tmps, so a crash between the
-    // renames would roll those tmps back on the next entry while the
-    // already-renamed rows manifest covers every batch id, erasing
-    // the docs record permanently (r15 review finding)
-    val tmps = Seq("docs", "graph", "rows")
-      .map(k => k -> new File(tmpRebandDir(storeDir, k)))
-    if (!tmps.exists(_._2.isDirectory)) return
-    val tgtFile = new File(rowsTmp, "_TARGET")
-    val complete = new File(rowsTmp, "_SUCCESS").exists &&
-      new File(rowsTmp, "_COVERED").exists && tgtFile.exists
-    if (!complete) { tmps.foreach(t => rm(t._2)); return }
-    val name = java.nio.file.Files.readString(tgtFile.toPath).trim
-    tmps.foreach { case (kind, tmp) =>
-      if (tmp.isDirectory) {
-        val target = new File(s"$storeDir/$kind/$name")
-        if (target.exists) rm(target)
-        require(tmp.renameTo(target),
-          s"reband recovery: rename $tmp -> $target failed")
-      }
-    }
-  }
-
-  /** Offline ARM MIGRATION of a persisted text store (r14): the
-    * maintained store runs a FIXED arm, and corpus growth eventually
-    * demands a wider one (the [[graft.operators.Dedup.autoBandRows]]
-    * rule). Because the stored band rows CARRY the full signature,
-    * the migration is a pure rewrite — re-derive every bucket at the
-    * new arm from the stored sigs (r slots → 2r slots per band), no
-    * text re-sign, no corpus re-read beyond the store itself — run
-    * between streaming generations (no concurrent folds, the
-    * [[graft.operators.Dedup.minhashReband]] contract under the
-    * persisted layout). The arm is self-described by the data
-    * ([[storeArm]]), so subsequent folds pick the new arm up with no
-    * sink reconfiguration.
-    *
-    * Two-phase commit: both kinds land in dot-prefixed tmp segments
-    * (invisible to readers), the rows tmp's `_COVERED` + `_TARGET`
-    * files complete the journal, [[recoverReband]] renames forward —
-    * a crash anywhere either rolls back (store untouched at the old
-    * arm) or completes on the next store entry. Returns the new
-    * arm (bands). */
-  def rebandTextStore(spark: SparkSession, storeDir: String,
-                      toBands: Option[Int] = None): Int = {
-    recoverReband(storeDir)
-    compactRecovery(storeDir)
-    val armOpt = storeArm(spark, storeDir)
-    if (armOpt.isEmpty) return 0 // empty store: nothing to migrate
-    val arm = armOpt.get
-    val newArm = toBands.getOrElse(arm / 2) // r doubles, bands halve
-    require(newArm >= 1 && PH.MinhashK % newArm == 0,
-      s"reband: invalid target arm $newArm")
-    if (newArm == arm) return arm
-    val rowsPerBand = PH.MinhashK / newArm
-    val committed = committedBatches(storeDir)
-    val last = committed.max
-    // docs consolidate unchanged; rows re-band from the carried sigs
-    spark.read.parquet(readerDirs(storeDir, "docs"): _*)
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "docs"))
-    writeIdBloom(spark.read.parquet(tmpRebandDir(storeDir, "docs"))
-      .select("doc_id"), "doc_id", tmpRebandDir(storeDir, "docs"))
-    readCommitted(spark, storeDir, "rows").get
-      .select("doc_id", "sig").distinct()
-      .select(col("doc_id"), col("sig"),
-        posexplode(array((0 until newArm).map(b =>
-          StreamingCuration.ophBucket(col("sig"), b, rowsPerBand)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .select("doc_id", "band", "bucket", "sig")
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "rows"))
-    commitReband(storeDir, committed, last)
-    newArm
-  }
-
-  /** The shared reband COMMIT tail: journal the tmp rows segment
-    * (`_COVERED` + `_TARGET` complete it), [[recoverReband]] renames
-    * both kinds forward, then the superseded segments are deleted —
-    * a crash anywhere after the journal completes is healed by the
-    * next store entry ([[recoverReband]] finishes the rename,
-    * [[compactRecovery]]/[[readerDirs]] reap/ignore superseded
-    * segments). */
-  private def commitReband(storeDir: String, committed: Seq[Long],
-                           last: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(tmpRebandDir(storeDir, "rows"))
-    java.nio.file.Files.writeString(tmp.resolve("_COVERED"),
-      committed.mkString("", "\n", "\n"))
-    java.nio.file.Files.writeString(tmp.resolve("_TARGET"), s"c$last")
-    recoverReband(storeDir) // the rename — commit is already durable
-    Seq("rows", "docs", "graph").foreach { kind =>
-      segDirs(storeDir, kind).filter { f =>
-        f.getName != s"c$last" && (f.getName.startsWith("b") ||
-          f.getName.drop(1).toLong < last)
-      }.foreach(rm)
-    }
-  }
-
-  /** Offline WIDTH MIGRATION of a persisted vector store (r15,
-    * VERDICT r14 #3 — the vector twin of [[rebandTextStore]], closing
-    * the growth boundary the [[foldVecBatch]] Scaladoc deferred to a
-    * migration that didn't exist): the maintained store runs a FIXED
-    * (nBands, bitsPerBand), and corpus growth eventually demands more
-    * bits per band ([[graft.operators.Similarity.autoBits]]'s rule).
-    * The stored rows CARRY qb/nb, so quantization is NEVER re-run;
-    * the new sign buckets are re-derived from the store's own docs
-    * record (the embeddings it admitted) — a pure store rewrite, no
-    * corpus re-read, run between streaming generations. Zero-norm
-    * vectors stay in the docs record and keep contributing no
-    * candidate rows (the inner join back to the carried rows drops
-    * them from the rewrite, exactly as every fold did). The new
-    * width is self-described by the data ([[vecStoreWidth]] reads the
-    * `bits` column), so subsequent folds pick it up with no sink
-    * reconfiguration. Same two-phase tmp + journal protocol as the
-    * text twin — both crash arms recover via [[recoverReband]].
-    * Returns the new bitsPerBand. */
-  def rebandVecStore(spark: SparkSession, storeDir: String,
-                     toBits: Option[Int] = None): Int = {
-    recoverReband(storeDir)
-    compactRecovery(storeDir)
-    val widthOpt = vecStoreWidth(spark, storeDir)
-    if (widthOpt.isEmpty) return 0 // empty/rowless store
-    val (nBands, bits) = widthOpt.get
-    val newBits = toBits.getOrElse(bits + 1)
-    require(newBits >= 1 && nBands * newBits <= 64,
-      s"rebandVecStore: invalid target width $newBits ($nBands bands over 64 dims)")
-    if (newBits == bits) return bits
-    val committed = committedBatches(storeDir)
-    val last = committed.max
-    // docs consolidate unchanged; rows re-bucket from the stored
-    // embeddings with the CARRIED quantization
-    spark.read.parquet(readerDirs(storeDir, "docs"): _*)
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "docs"))
-    writeIdBloom(spark.read.parquet(tmpRebandDir(storeDir, "docs"))
-      .select("vec_id"), "vec_id", tmpRebandDir(storeDir, "docs"))
-    val carried = readCommitted(spark, storeDir, "rows").get
-      .select("vec_id", "qb", "nb").distinct()
-    readCommitted(spark, storeDir, "docs").get
-      .select("vec_id", "embedding").join(carried, "vec_id")
-      .select(col("vec_id"), col("qb"), col("nb"),
-        posexplode(array((0 until nBands).map(b =>
-          V.signBucket(col("embedding"), b, newBits)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .select(col("vec_id"), col("band"), col("bucket"), col("qb"),
-        col("nb"), lit(newBits).as("bits"), lit(nBands).as("nbands"))
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "rows"))
-    commitReband(storeDir, committed, last)
-    newBits
   }
 
   /** The committed admitted corpus of a text store:
@@ -568,9 +229,9 @@ object StoreMaintenance {
 
   /** The arm a text store RUNS, self-described by its data: the slot
     * count of any stored bucket string (r slots ⇒ K/r bands) from the
-    * LATEST committed segment — no metadata file, so there is no
-    * metadata/data crash window for [[rebandTextStore]] to manage.
-    * None for an empty (or all-sigless) store. */
+    * LATEST committed segment — no metadata file, so the arm can
+    * never disagree with the rows. None for an empty (or all-sigless)
+    * store. */
   def storeArm(spark: SparkSession, storeDir: String): Option[Int] = {
     readerDirs(storeDir, "rows").reverseIterator.flatMap { p =>
       spark.read.parquet(p).select("bucket").limit(1)
@@ -579,19 +240,83 @@ object StoreMaintenance {
     }.nextOption()
   }
 
+  /** ≥ shingleN words (so the doc has at least one shingle). */
+  private[graft] def hasShingles(c: Column, shingleN: Int): Column =
+    length(c) - length(replace(c, lit(" "))) >= shingleN - 1
+
+  /** Band-b bucket key of an OPH signature: ':'-joined slot values —
+    * the [[graft.operators.Dedup.ophLsh]] banding. */
+  private[graft] def ophBucket(sig: Column, b: Int, rowsPerBand: Int): Column =
+    concat_ws(":", (0 until rowsPerBand).map(r =>
+      get(sig, lit(b * rowsPerBand + r)).cast("string")): _*)
+
+  /** Signature-agreement MinHash Jaccard estimate in ppm. The agree
+    * count is the native [[graft.functions.vectorNative.sig_agree]]
+    * (r17) — this runs inside `exists(cands, …)` per candidate per
+    * band, where the HOF `aggregate(zip_with(when))` form cost K=64
+    * interpreted dispatches per candidate (parity pinned in
+    * VectorNativeSpec). */
+  private[graft] def ophEstPpm(a: Column, b: Column): Column =
+    floor(lit(1000000.0) * graft.functions.vectorNative.sig_agree(a, b)
+      / PH.MinhashK).cast("long")
+
+  /** The OPH admission core of [[foldTextBatch]]: per-band LEFT joins
+    * of `base` (must carry a nullable `sig` column; sigless rows are
+    * ADMITTED) against a (band, bucket, cands) lookup, then the
+    * row-local signature-agreement verify. Returns base's columns. */
+  private[graft] def ophAdmit(base: DataFrame, corpusBuckets: DataFrame,
+      bands: Int, minEstJaccardPpm: Long): DataFrame = {
+    val rowsPerBand = PH.MinhashK / bands
+    val outCols = base.columns.toSeq
+    val joined = (0 until bands).foldLeft(base) { (df, b) =>
+      df.join(corpusBuckets.where(col("band") === b)
+          .select(col("bucket").as(s"bk$b"), col("cands").as(s"cands$b")),
+        ophBucket(col("sig"), b, rowsPerBand) === col(s"bk$b"), "left")
+    }
+    val matched = (0 until bands).map { b =>
+      coalesce(exists(col(s"cands$b"), c =>
+        ophEstPpm(col("sig"), c) >= minEstJaccardPpm), lit(false))
+    }.reduce(_ || _)
+    joined.where(!matched).select(outCols.map(col): _*)
+  }
+
+  /** The vector admission core of [[foldVecBatch]]: per-band LEFT
+    * joins of `base` (must carry `embedding`, quantized `qa` and its
+    * norm `na`) against a (band, bucket, cands:list<(qb, nb)>) lookup,
+    * then the row-local exact quantized-cosine verify. A zero-norm
+    * arrival has no cosine to any candidate — ADMIT it without the
+    * verify (cosPpm would divide by zero; the batch family excludes
+    * zero-norm rows from pairing the same way). Returns base's
+    * columns. */
+  private[graft] def vecAdmit(base: DataFrame, corpusBuckets: DataFrame,
+      nBands: Int, bitsPB: Int, minCosPpm: Long): DataFrame = {
+    val outCols = base.columns.toSeq
+    val joined = (0 until nBands).foldLeft(base) { (df, b) =>
+      df.join(corpusBuckets.where(col("band") === b)
+          .select(col("bucket").as(s"bk$b"), col("cands").as(s"cands$b")),
+        V.signBucket(col("embedding"), b, bitsPB) === col(s"bk$b"),
+        "left")
+    }
+    val matched = col("na") > 0 && (0 until nBands).map { b =>
+      coalesce(exists(col(s"cands$b"), c =>
+        V.cosPpm(V.qdot(col("qa"), c.getField("qb")), col("na"),
+          c.getField("nb")) >= minCosPpm), lit(false))
+    }.reduce(_ || _)
+    joined.where(!matched).select(outCols.map(col): _*)
+  }
+
   /** One transactional text-store fold: admit `batch` against the
     * committed store, append the admitted docs + their band rows.
     * Idempotent per batchId (replay no-op / deterministic rewrite).
     * `bands` is the arm a NEW store is created at; an existing store
-    * folds at ITS OWN arm ([[storeArm]] — which a [[rebandTextStore]]
-    * migration may have moved since the sink was configured).
+    * folds at ITS OWN arm ([[storeArm]]).
     *
     * Scale shape (r15, VERDICT r14 #1): the stored band rows are
     * semi-joined down to the batch's PROBED (band, bucket) keys —
     * |batch| × arm keys, broadcast — BEFORE the candidate-list
     * aggregate, so per-fold shuffle/aggregate cost is
     * O(|batch| × bucket occupancy), never O(|store|) (buckets the
-    * batch never probes cannot affect [[StreamingCuration.ophAdmit]]'s
+    * batch never probes cannot affect [[ophAdmit]]'s
     * per-band equi-joins — the pruning is exact, spec-pinned against
     * the unpruned form). The pruned lookup is batch-bounded, so it is
     * checkpointed once and broadcast into all `arm` band joins instead
@@ -611,13 +336,12 @@ object StoreMaintenance {
     * carries sigless rows, their ids are anti-joined against the
     * stored doc ids (ids are immutable once ingested — the k-NN
     * fold's convention), and the stored side is pruned by the
-    * per-segment id digests ([[writeIdBloom]]) to the segments that
+    * per-segment id digests ([[writeDocsWithBloom]]) to the segments that
     * might hold a batch id — no redelivery ⇒ no store read at all. */
   def foldTextBatch(batch: DataFrame, batchId: Long, storeDir: String,
                     bands: Int = 8, shingleN: Int = 3,
                     minEstJaccardPpm: Long = 500000L,
                     maxBucketSize: Option[Int] = None): Unit = {
-    recoverReband(storeDir)
     if (isCommitted(storeDir, batchId)) return
     val spark = batch.sparkSession
     val arm = storeArm(spark, storeDir).getOrElse(bands)
@@ -625,7 +349,7 @@ object StoreMaintenance {
     require(arm * rowsPerBand == PH.MinhashK)
     val batchC = batch.localCheckpoint(true)
     val base0 = batchC.withColumn("sig",
-      when(StreamingCuration.hasShingles(col("text"), shingleN),
+      when(hasShingles(col("text"), shingleN),
         graft.functions.textNative.oph_sig(col("text"), shingleN)))
     // coalesce: hasShingles is NULL for a null text payload, and a
     // null-text doc IS admitted unconditionally (sig null) — the
@@ -636,7 +360,7 @@ object StoreMaintenance {
     // checkpointed batch instead of two.
     val probeIds = batchC
       .where(!coalesce(
-        StreamingCuration.hasShingles(col("text"), shingleN), lit(false)))
+        hasShingles(col("text"), shingleN), lit(false)))
       .select("doc_id").distinct().collect().map(_.getLong(0))
     val base = if (probeIds.isEmpty) base0 else {
       // digest-pruned guard (r16): probe the per-segment id blooms
@@ -655,7 +379,7 @@ object StoreMaintenance {
       case Some(stored) =>
         val probed = base.where(col("sig").isNotNull)
           .select(posexplode(array((0 until arm).map(b =>
-            StreamingCuration.ophBucket(col("sig"), b, rowsPerBand)): _*)))
+            ophBucket(col("sig"), b, rowsPerBand)): _*)))
           .withColumnRenamed("pos", "band")
           .withColumnRenamed("col", "bucket")
           .select("band", "bucket").distinct()
@@ -672,7 +396,7 @@ object StoreMaintenance {
           .groupBy("band", "bucket")
           .agg(collect_list(col("sig")).as("cands"))
           .localCheckpoint(true)
-        StreamingCuration.ophAdmit(base, buckets, arm, minEstJaccardPpm)
+        ophAdmit(base, buckets, arm, minEstJaccardPpm)
     }
     val admittedC = admitted.localCheckpoint(true)
     // docs first (+ their id digest); the band rows' _SUCCESS commits
@@ -682,83 +406,37 @@ object StoreMaintenance {
     admittedC.where(col("sig").isNotNull)
       .select(col("doc_id"), col("sig"),
         posexplode(array((0 until arm).map(b =>
-          StreamingCuration.ophBucket(col("sig"), b, rowsPerBand)): _*)))
+          ophBucket(col("sig"), b, rowsPerBand)): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       .select("doc_id", "band", "bucket", "sig")
       .write.mode("overwrite").parquet(rowsDir(storeDir, batchId))
   }
 
-  /** Live `b` segment dirs (not yet consolidated by a compaction). */
-  private def liveBatchDirs(storeDir: String): Int =
-    segDirs(storeDir, "rows").count(_.getName.startsWith("b"))
-
-  /** In-generation auto-compaction (r15, VERDICT r14 #5): after a
-    * fold, consolidate once the live per-batch dirs exceed
-    * `compactEvery` — so a long-running sink never accumulates an
-    * unbounded directory count for every fold to list and read.
-    * Runs INSIDE the foreachBatch serialization (batches are
-    * sequential per sink), so no concurrent-fold window opens; a
-    * kill landing mid-compaction is exactly the crash arm
-    * [[compactStore]]'s recovery already covers, and the resumed
-    * sink's next fold reads an equivalent store either way
-    * (spec-pinned ≡ the never-compacted twin). */
-  private def maybeCompact(spark: SparkSession, storeDir: String,
-                           compactEvery: Option[Int]): Unit =
-    compactEvery.foreach { n =>
-      require(n >= 2, s"compactEvery must be >= 2, got $n")
-      if (liveBatchDirs(storeDir) >= n) { compactStore(spark, storeDir); () }
-    }
-
-  /** The maintained-store ingest sink for text: each micro-batch is
-    * admitted against — and folded into — the persisted store. Start
-    * with `.option("checkpointLocation", …).start()`. `compactEvery`
-    * = Some(n) consolidates segment dirs whenever n live per-batch
-    * dirs accumulate ([[maybeCompact]]). */
-  def maintainTextStore(docs: DataFrame, storeDir: String,
-                        bands: Int = 8, shingleN: Int = 3,
-                        minEstJaccardPpm: Long = 500000L,
-                        maxBucketSize: Option[Int] = None,
-                        compactEvery: Option[Int] = None): DataStreamWriter[Row] =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        foldTextBatch(b, id, storeDir, bands, shingleN, minEstJaccardPpm,
-          maxBucketSize)
-        maybeCompact(b.sparkSession, storeDir, compactEvery)
-      }
-
   /** The width a vector store RUNS, self-described by its data —
     * (nBands, bitsPerBand) from the `nbands`/`bits` columns every
     * stored row carries, read as ONE row of the latest committed
     * rows segment that has any (a zero-norm-only batch leaves an
-    * empty segment). No metadata file, so there is no metadata/data
-    * crash window for [[rebandVecStore]] to manage — the [[storeArm]]
-    * design; a limit(1) read, not a segment scan, so the per-fold
-    * width lookup stays O(1) even after a compaction consolidates
-    * the whole store into one segment (r15 review). None for an
+    * empty segment). No metadata file — the [[storeArm]] design; a
+    * limit(1) read, not a segment scan, so the per-fold width lookup
+    * stays O(1) whatever the segment size (r15 review). None for an
     * empty/rowless store, and None for a store written before these
-    * columns existed (such a store folds at the sink's configured
-    * width — the pre-migration behavior it was built with). */
+    * columns existed (such a store folds at the caller's configured
+    * width — the behavior it was built with). */
   def vecStoreWidth(spark: SparkSession, storeDir: String): Option[(Int, Int)] =
     readerDirs(storeDir, "rows").reverseIterator.flatMap { p =>
       val df = spark.read.parquet(p)
       if (!df.columns.contains("nbands") || !df.columns.contains("bits"))
         None
-      // isNotNull: a mergeSchema compaction of a legacy store leaves
-      // the width columns present but NULL on pre-migration rows —
-      // such rows must not elect the width (r16, ADVICE)
-      else df.select(col("nbands"), col("bits"))
-        .where(col("bits").isNotNull && col("nbands").isNotNull).limit(1)
+      else df.select(col("nbands"), col("bits")).limit(1)
         .collect().headOption.map(r => (r.getInt(0), r.getInt(1)))
     }.nextOption()
 
-  /** One transactional vector-store fold — the
-    * [[StreamingCuration.admitVectorStream]] math against stored
-    * (band, bucket, qb, nb) rows. Zero-norm arrivals are admitted
-    * but contribute no candidate rows (the gate's corpusQ nb > 0
-    * filter, carried into the store). `nBands`/`bitsPerBand` create a
-    * NEW store; an existing store folds at ITS OWN width
-    * ([[vecStoreWidth]] — which a [[rebandVecStore]] migration may
-    * have moved since the sink was configured). Scale shape and
+  /** One transactional vector-store fold — quantized-cosine
+    * admission ([[vecAdmit]]) against stored (band, bucket, qb, nb)
+    * rows. Zero-norm arrivals are admitted but contribute no candidate
+    * rows (only nb > 0 rows are stored). `nBands`/`bitsPerBand` create
+    * a NEW store; an existing store folds at ITS OWN width
+    * ([[vecStoreWidth]]). Scale shape and
     * `maxBucketSize` semantics as [[foldTextBatch]] (r15: stored rows
     * pruned to the batch's probed buckets before the aggregate; cap
     * as a window count). Redelivery guard (r15, ADVICE): zero-norm
@@ -766,12 +444,11 @@ object StoreMaintenance {
     * redelivery would duplicate their record — non-zero vectors
     * self-protect (cos 10⁶ ppm to themselves); batches carrying
     * zero-norm rows anti-join those ids against the stored vec ids,
-    * digest-pruned to suspect segments (r16, [[writeIdBloom]]). */
+    * digest-pruned to suspect segments (r16, [[writeDocsWithBloom]]). */
   def foldVecBatch(batch: DataFrame, batchId: Long, storeDir: String,
                    nBands: Int = 4, bitsPerBand: Int = 4,
                    minCosPpm: Long = 400000L,
                    maxBucketSize: Option[Int] = None): Unit = {
-    recoverReband(storeDir)
     if (isCommitted(storeDir, batchId)) return
     val spark = batch.sparkSession
     val (bandsRun, bitsRun) =
@@ -816,7 +493,7 @@ object StoreMaintenance {
           .groupBy("band", "bucket")
           .agg(collect_list(struct(col("qb"), col("nb"))).as("cands"))
           .localCheckpoint(true)
-        StreamingCuration.vecAdmit(base, buckets, bandsRun,
+        vecAdmit(base, buckets, bandsRun,
           bitsRun, minCosPpm)
     }
     val admittedC = admitted.localCheckpoint(true)
@@ -831,19 +508,6 @@ object StoreMaintenance {
         col("nb"), lit(bitsRun).as("bits"), lit(bandsRun).as("nbands"))
       .write.mode("overwrite").parquet(rowsDir(storeDir, batchId))
   }
-
-  /** The maintained-store ingest sink for vectors. */
-  def maintainVecStore(vecs: DataFrame, storeDir: String,
-                       nBands: Int = 4, bitsPerBand: Int = 4,
-                       minCosPpm: Long = 400000L,
-                       maxBucketSize: Option[Int] = None,
-                       compactEvery: Option[Int] = None): DataStreamWriter[Row] =
-    vecs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        foldVecBatch(b, id, storeDir, nBands, bitsPerBand, minCosPpm,
-          maxBucketSize)
-        maybeCompact(b.sparkSession, storeDir, compactEvery)
-      }
 
   // ----- maintained k-NN GRAPH (the INDEX artifact, not just the
   // ----- admission snapshot) --------------------------------------
@@ -862,45 +526,32 @@ object StoreMaintenance {
     * shadowing is total per node), and a node's edge set never
     * empties once it has an edge (re-top-k only improves, so a node
     * can never need to DISAPPEAR — the one case latest-containing
-    * resolution could not express). A legacy FULL snapshot, a
-    * compaction consolidation, and a reband rewrite are the special
-    * case that contains every node and shadows everything older. A
-    * `b` segment counts only if its batch COMMITTED (the graph is
+    * resolution could not express). A legacy FULL snapshot is the
+    * special case that contains every node and shadows everything
+    * older. A segment counts only if its batch COMMITTED (the graph is
     * written BEFORE the commit marker, so a crash-orphaned delta is
-    * invisible to the replay that rewrites it); a `c` only once its
-    * rows twin carries the manifest, with a newer segment of either
-    * kind shadowing per-node anything a lingering superseded dir
-    * still holds. (vec_id, rank, neighbor_id, cos_ppm). */
+    * invisible to the replay that rewrites it).
+    * (vec_id, rank, neighbor_id, cos_ppm). */
   def knnGraphCurrent(spark: SparkSession, storeDir: String): Option[DataFrame] =
     graphResolve(spark, storeDir, None)
 
-  /** Committed graph segments as (path, resolution ordinal) — `c`
-    * outranks `b` at the same id. */
-  private def committedGraphSegs(storeDir: String): Seq[(String, Long)] =
-    segDirs(storeDir, "graph")
-      .filter { f =>
-        if (f.getName.startsWith("c"))
-          new File(s"$storeDir/rows/${f.getName}/_COVERED").exists
-        else isCommitted(storeDir, f.getName.drop(1).toLong)
-      }
-      .map(f => (f.getPath, f.getName.drop(1).toLong * 2 +
-        (if (f.getName.startsWith("c")) 1L else 0L)))
-
-  /** Latest-per-node resolution over the committed graph segments,
-    * optionally PRUNED to `onlyIds` (semi-join per segment BEFORE the
+  /** Latest-per-node resolution over the committed graph segments
+    * (a higher batch id shadows a lower one), optionally PRUNED to
+    * `onlyIds` (semi-join per segment BEFORE the
     * union — the fold's merge base reads only the affected ids'
     * rows; at warehouse scale a node-bucketed segment layout makes
     * that pruned read partition-prunable too). No broadcast hint:
     * the ids side is batch × occupancy-bounded, and Spark sizes it. */
   private def graphResolve(spark: SparkSession, storeDir: String,
       onlyIds: Option[DataFrame]): Option[DataFrame] = {
-    val segs = committedGraphSegs(storeDir)
+    val segs = readerDirs(storeDir, "graph")
     if (segs.isEmpty) None
     else {
-      val parts = segs.map { case (p, ord) =>
+      val parts = segs.map { p =>
         val df = spark.read.parquet(p)
         onlyIds.map(ids => df.join(ids, Seq("vec_id"), "left_semi"))
-          .getOrElse(df).withColumn("_seg", lit(ord))
+          .getOrElse(df)
+          .withColumn("_seg", lit(new File(p).getName.drop(1).toLong))
       }
       val w = org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
       Some(parts.reduce(_ unionByName _)
@@ -910,8 +561,8 @@ object StoreMaintenance {
   }
 
   /** One transactional k-NN graph fold
-    * ([[graft.operators.Similarity.knnGraphUpsert]]'s merge under the
-    * streaming engine): every new candidate pair touches the batch
+    * ([[graft.operators.Similarity.knnGraphUpsert]]'s merge over a
+    * persisted store): every new candidate pair touches the batch
     * (band keys are per-vector content functions at a FIXED width),
     * so the fold joins the batch's band rows against the stored ∪
     * batch rows, scores only those pairs (stored rows carry qe/qn —
@@ -927,18 +578,12 @@ object StoreMaintenance {
     * the same committed-store state). Zero-norm vectors carry no
     * candidate rows and no edges (the batch family's pairing rule) —
     * but they ARE ingested into the docs record, so the id guard
-    * covers their redelivery too (r15, the ADVICE hole). The fold
-    * persists the admitted (ts, vec_id, embedding) docs record
-    * (r15), which makes the store SELF-CONTAINED for its width
-    * boundary: [[rebandKnnGraphStore]] migrates it offline as a
-    * store rewrite. An existing store folds at ITS OWN width
-    * ([[vecStoreWidth]]), so a migration is picked up with no sink
-    * reconfiguration. */
+    * covers their redelivery too (r15, the ADVICE hole). An existing
+    * store folds at ITS OWN width ([[vecStoreWidth]]). */
   def foldKnnGraphBatch(batch: DataFrame, batchId: Long, storeDir: String,
                         k: Int = 4, nBands: Int = 4,
                         bitsPerBand: Int = 4,
                         maxBucketSize: Option[Int] = None): Unit = {
-    recoverReband(storeDir)
     if (isCommitted(storeDir, batchId)) return
     val spark = batch.sparkSession
     val S = graft.operators.Similarity
@@ -1052,16 +697,15 @@ object StoreMaintenance {
     // checkpointed, so each per-segment semi-join reference in
     // graphResolve re-derives this union+distinct from the
     // materialized batch-sized pairs inside the delta write job —
-    // cheaper than the extra per-fold checkpoint action it replaced
-    // (segment count is bounded by compactEvery).
+    // cheaper than the extra per-fold checkpoint action it replaced.
     val affectedIds = scoredNew.select(col("vec_a").as("vec_id"))
       .union(scoredNew.select(col("vec_b").as("vec_id"))).distinct()
     val delta = graphResolve(spark, storeDir, Some(affectedIds)) match {
       case None => S.graphFromScored(scoredNew, k)
       case Some(gAff) => S.graphMergeDelta(gAff, scoredNew, k)
     }
-    // docs first (the self-contained record a width migration rebuilds
-    // from — r15), then the graph delta; the band rows' _SUCCESS
+    // docs first (the id guard's record, zero-norm ids included),
+    // then the graph delta; the band rows' _SUCCESS
     // commits the batch, so neither is readable before the commit
     writeDocsWithBloom(arrivals.select("ts", "vec_id", "embedding"),
       "vec_id", docsDir(storeDir, batchId))
@@ -1069,78 +713,12 @@ object StoreMaintenance {
     batchRows.write.mode("overwrite").parquet(rowsDir(storeDir, batchId))
   }
 
-  /** Offline WIDTH MIGRATION of a persisted k-NN graph store (r15):
-    * unlike the admission stores, a top-k graph is NOT recoverable
-    * under a bucket refinement (a node's new top-k can need pairs
-    * below its old top-k), so this is a store REWRITE, not a filter:
-    * band rows re-bucket at the new width from the store's own docs
-    * record with CARRIED qe/qn (quantization never re-runs), and the
-    * graph is rebuilt from the rewritten rows' pair join + the
-    * carried quantization — no corpus re-read, the pair join at the
-    * WIDER width (smaller occupancy than any fold ever paid at the
-    * old width), run between streaming generations. The result is
-    * exactly the from-scratch graph at the new width, so subsequent
-    * folds (which pick the width up from the data, [[vecStoreWidth]])
-    * continue the upsert-merge exactness chain. Same two-phase
-    * journal as the other migrations, graph tmp included.
-    * `maxBucketSize` (r16, ADVICE) caps the rebuild's self-join with
-    * the fold family's [[graft.operators.Dedup.capBuckets]] semantics
-    * — a boilerplate bucket that is sign-identical across all dims
-    * stays degenerate at ANY width, and the uncapped rewrite would
-    * pay its s² pairs even when every fold ran capped; a store
-    * maintained with a cap should migrate with the same cap. Returns
-    * the new bitsPerBand. */
-  def rebandKnnGraphStore(spark: SparkSession, storeDir: String,
-                          toBits: Option[Int] = None, k: Int = 4,
-                          maxBucketSize: Option[Int] = None): Int = {
-    recoverReband(storeDir)
-    compactRecovery(storeDir)
-    val S = graft.operators.Similarity
-    val widthOpt = vecStoreWidth(spark, storeDir)
-    if (widthOpt.isEmpty) return 0
-    val (nBands, bits) = widthOpt.get
-    val newBits = toBits.getOrElse(bits + 1)
-    require(newBits >= 1 && nBands * newBits <= 64,
-      s"rebandKnnGraphStore: invalid target width $newBits")
-    if (newBits == bits) return bits
-    val committed = committedBatches(storeDir)
-    val last = committed.max
-    spark.read.parquet(readerDirs(storeDir, "docs"): _*)
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "docs"))
-    writeIdBloom(spark.read.parquet(tmpRebandDir(storeDir, "docs"))
-      .select("vec_id"), "vec_id", tmpRebandDir(storeDir, "docs"))
-    val carried = readCommitted(spark, storeDir, "rows").get
-      .select("vec_id", "qe", "qn").distinct()
-    spark.read.parquet(readerDirs(storeDir, "docs"): _*)
-      .select("vec_id", "embedding").join(carried, "vec_id")
-      .select(col("vec_id"), col("qe"), col("qn"),
-        posexplode(array((0 until nBands).map(b =>
-          V.signBucket(col("embedding"), b, newBits)): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-      .select(col("vec_id"), col("band"), col("bucket"), col("qe"),
-        col("qn"), lit(newBits).as("bits"), lit(nBands).as("nbands"))
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "rows"))
-    val newRows = graft.operators.Dedup.capBuckets(
-      spark.read.parquet(tmpRebandDir(storeDir, "rows")), maxBucketSize)
-    val pairs = newRows.select(col("band"), col("bucket"),
-        col("vec_id").as("va"))
-      .join(newRows.select(col("band"), col("bucket"),
-        col("vec_id").as("vb")), Seq("band", "bucket"))
-      .where(col("va") < col("vb"))
-      .select(col("va").as("vec_a"), col("vb").as("vec_b"))
-      .distinct()
-    S.graphFromScored(S.scorePairs(pairs, carried), k)
-      .write.mode("overwrite").parquet(tmpRebandDir(storeDir, "graph"))
-    commitReband(storeDir, committed, last)
-    newBits
-  }
-
   /** Declared driver-gate composite (r15, VERDICT r14 #7 — makes the
     * maintenance loop ORACLE-checked, not just spec-checked): replay
     * the documents relation as `nBatches` residue-class batches
     * through the REAL [[foldTextBatch]] into a fresh persisted store
-    * — the same admit-and-fold transaction the streaming sink runs,
-    * parquet segments, `_SUCCESS` commits and all — then read the
+    * — the whole admit-and-fold transaction, parquet segments,
+    * `_SUCCESS` commits and all — then read the
     * final store back as its band rows (sigless admitted docs as the
     * (-1, '') sentinel row). The DuckDB oracle restates the
     * SEQUENTIAL gated admission (batch b admits a doc iff no
@@ -1167,7 +745,7 @@ object StoreMaintenance {
         col("bucket"))
     val sigless = textStoreDocs(spark, dir).get
       .where(!coalesce(
-        StreamingCuration.hasShingles(col("text"), 3), lit(false)))
+        hasShingles(col("text"), 3), lit(false)))
       .select(col("doc_id"), lit(-1L).as("band"), lit("").as("bucket"))
     // materialize, then reap the replay's temp store — the driver
     // gate and bench run this query repeatedly, and each run would
@@ -1211,60 +789,6 @@ object StoreMaintenance {
     out
   }
 
-  /** [[storeAdvisor]]'s verdict on a live maintained store: the
-    * arm/width its CURRENT size would be BUILT at, against what it
-    * runs. `current`/`recommended` are bands for a text store
-    * ([[storeArm]]) and bitsPerBand for a vector/graph store
-    * ([[vecStoreWidth]]); `migrate` ⇔ they differ (the matching
-    * [[rebandTextStore]]/[[rebandVecStore]]/[[rebandKnnGraphStore]]
-    * call closes the gap between streaming generations). */
-  final case class StoreAdvice(kind: String, storedN: Long,
-      current: Int, recommended: Int, migrate: Boolean, reason: String)
-
-  /** WHEN to migrate (r16, VERDICT r15 #5): apply the growth rules
-    * the batch builders mechanize — [[graft.operators.Dedup
-    * .autoBandRows]] for text, [[graft.operators.Similarity
-    * .autoBits]] for vectors — to a LIVE store's own committed state:
-    * N from its docs record (the admitted corpus; a pre-r15 graph
-    * store without one falls back to the distinct rows ids), the
-    * running arm/width self-described by the data. The stores run a
-    * FIXED arm/width by design (the folds' exactness argument), so
-    * crossing a rule boundary is an operator decision this makes
-    * mechanical: run the advisor between streaming generations and
-    * migrate when it says so. Kind is detected from the rows schema
-    * (text rows carry `sig`; vector/graph rows carry the width
-    * columns). None for an empty store — nothing to advise.
-    * `targetOccupancy`/`invS2` are the rules' own knobs, passed
-    * through so a deployment (or the threshold-flip spec) can pin
-    * its own boundary. */
-  def storeAdvisor(spark: SparkSession, storeDir: String,
-                   targetOccupancy: Long = 128L,
-                   invS2: Long = graft.operators.Dedup.AutoInvS2)
-      : Option[StoreAdvice] = {
-    recoverReband(storeDir)
-    val rowsCols = readerDirs(storeDir, "rows").lastOption
-      .map(p => spark.read.parquet(p).columns.toSet)
-      .getOrElse(Set.empty)
-    def storedN: Long = readCommitted(spark, storeDir, "docs")
-      .map(_.count())
-      .orElse(readCommitted(spark, storeDir, "rows")
-        .map(_.select("vec_id").distinct().count()))
-      .getOrElse(0L)
-    if (rowsCols.contains("sig")) storeArm(spark, storeDir).map { arm =>
-      val n = storedN
-      val recArm = PH.MinhashK / graft.operators.Dedup.autoBandRows(n, invS2)
-      StoreAdvice("text", n, arm, recArm, recArm != arm,
-        s"autoBandRows(N=$n, invS2=$invS2) -> r=${PH.MinhashK / recArm} " +
-          s"(bands=$recArm) vs stored bands=$arm")
-    } else vecStoreWidth(spark, storeDir).map { case (nBands, bits) =>
-      val n = storedN
-      val recBits = graft.operators.Similarity.autoBits(n, targetOccupancy)
-      StoreAdvice("vector", n, bits, recBits, recBits != bits,
-        s"autoBits(N=$n, occupancy=$targetOccupancy) = $recBits " +
-          s"vs stored $bits ($nBands bands)")
-    }
-  }
-
   /** The GRAPH twin of [[maintainedTextStoreReplay]] (r16, VERDICT
     * r15 #1 — the last maintained artifact the driver gate could not
     * see): replay the embeddings relation as residue batches through
@@ -1274,12 +798,11 @@ object StoreMaintenance {
     * fresh persisted store, and return the FINAL maintained graph.
     * The store is CREATED at the width its corpus runs —
     * [[graft.operators.Similarity.autoBits]] of the usable
-    * (non-zero-norm) corpus count, the sink-configuration decision an
+    * (non-zero-norm) corpus count, the configuration decision an
     * operator makes once when standing a store up for a corpus this
     * size (the sim_knn_upsert convention; a fixed NARROW width over a
-    * 100x corpus is exactly the degenerate-occupancy shape the
-    * advisor/reband lifecycle exists to prevent, and its oracle would
-    * be a 5-billion-pair join neither engine should run) — and every
+    * 100x corpus is the degenerate-occupancy shape, and its oracle
+    * would be a 5-billion-pair join neither engine should run) — and every
     * fold then runs at the store's own self-described width. The
     * oracle is the from-scratch k-NN graph at the SAME auto width
     * (`sim_knn_graph_auto`'s SQL, whose abits CTE derives the width
@@ -1314,18 +837,4 @@ object StoreMaintenance {
     rm(new java.io.File(dir))
     out
   }
-
-  /** The maintained k-NN graph ingest sink — the index-maintenance
-    * loop a vector store runs behind its admission gate. */
-  def maintainKnnGraph(vecs: DataFrame, storeDir: String,
-                       k: Int = 4, nBands: Int = 4,
-                       bitsPerBand: Int = 4,
-                       maxBucketSize: Option[Int] = None,
-                       compactEvery: Option[Int] = None): DataStreamWriter[Row] =
-    vecs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        foldKnnGraphBatch(b, id, storeDir, k, nBands, bitsPerBand,
-          maxBucketSize)
-        maybeCompact(b.sparkSession, storeDir, compactEvery)
-      }
 }

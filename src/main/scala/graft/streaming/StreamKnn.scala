@@ -12,8 +12,7 @@ import graft.functions.{VectorOps => V}
   * doc look like" routing) that the batch `sim_` family answers only
   * offline.
   *
-  * Same fully stream-STATELESS inverted layout as
-  * [[StreamingCuration.admitVectorStream]] (the shapes needing
+  * A fully stream-STATELESS inverted layout (the shapes needing
   * stream-side state — a candidate explode + per-query re-aggregate —
   * are avoided so no watermark, no state store, no late-data
   * semantics enter the picture):

@@ -116,30 +116,6 @@ class KnnRebandSpec extends AnyFunSuite {
     assert(migrated == scratch)
   }
 
-  test("text-store lifecycle: upsert at (8,2), reband to (4,4), " +
-    "upsert at (4,4) — every step equals its from-scratch twin") {
-    val d = graft.relational.Tables.documents(spark, sf)
-      .localCheckpoint(true)
-    val before = d.where(pmod(col("doc_id"), lit(10)) =!= 0)
-      .localCheckpoint(true)
-    val D = graft.operators.Dedup
-    // (1) ingest into the store: the declared upsert now derives the
-    // stored arm from the corpus size (r13) — below the 10^4
-    // boundary autoBandRows = 2, so the auto store IS the (8,2)
-    // store and gate hashes are unchanged by construction
-    val up = D.minhashLshUpsert(before, splitMod = 7).collect().toSeq
-    assert(up == D.minhashLsh(before).collect().toSeq)
-    assert(up == D.minhashLshUpsertWith(before, splitMod = 7)
-      .collect().toSeq)
-    // (2) growth will cross the 10^4 arm boundary: migrate 8×2 → 4×4
-    assert(D.minhashReband(before).collect().toSeq ==
-      D.minhashLsh(before, bands = 4, rowsPerBand = 4).collect().toSeq)
-    // (3) ingest continues at the migrated arm: merge exact again
-    assert(D.minhashLshUpsertWith(d, bands = 4, rowsPerBand = 4,
-        splitMod = 10).collect().toSeq ==
-      D.minhashLsh(d, bands = 4, rowsPerBand = 4).collect().toSeq)
-  }
-
   test("lifecycle COMPOSITES (r13): the chained build → upsert → " +
     "reband → upsert equals the from-scratch result over the full " +
     "corpus at the final arm/width on both modalities") {
@@ -153,28 +129,5 @@ class KnnRebandSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sf)
     assert(Similarity.knnStoreLifecycle(e).collect().toSeq ==
       Similarity.knnGraphAnchored(e, 4, 4, 5).collect().toSeq)
-  }
-
-  test("DOUBLE migration (r14, VERDICT r13 #5): two chained boundary " +
-    "crossings — r→2r→4r and w→w+1→w+2 — still equal the from-scratch " +
-    "result at the FINAL arm/width, at two gate SFs: the refinement " +
-    "really COMPOUNDS (each step consumes the previous step's store, " +
-    "scores carried through both boundaries)") {
-    val D = graft.operators.Dedup
-    for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
-      // text: auto arm r0 = 2 at both gate SFs → chain 2 → 4 → 8;
-      // oracle = from-scratch blocker at (K/4r0, 4r0) = (2, 8)
-      val d = Tables.documents(spark, dir)
-      assert(D.minhashRebandChain(d, steps = 2).collect().toSeq ==
-        D.minhashLsh(d, bands = 2, rowsPerBand = 8).collect().toSeq,
-        s"text chain diverged at $dir")
-      // vector: auto width floor w0 = 4 → chain 4 → 5 → 6; oracle =
-      // from-scratch anchored graph at 6
-      val e2 = Tables.embeddings(spark, dir)
-      assert(Similarity.knnGraphRebandChain(e2, steps = 2)
-        .collect().toSeq ==
-        Similarity.knnGraphAnchored(e2, 4, 4, 6).collect().toSeq,
-        s"vector chain diverged at $dir")
-    }
   }
 }

@@ -285,72 +285,62 @@ class StreamingTopologySpec extends AnyFunSuite {
       s"the blocked job ended with ${outcome.get}")
   }
 
-  test("kill/resume from checkpoint: no re-emission, dedup state survives " +
-    "the restart, data that arrived while down is processed exactly once (r11)") {
+  test("kill/resume from checkpoint: a clean restart re-emits no committed " +
+    "epoch, delivers each record that arrived while down to its branch " +
+    "exactly once, and continues the batch ids") {
     // The reference's uncaught-exception contract is SHUTDOWN_APPLICATION
     // precisely so a clean restart resumes WITHOUT duplicates
     // (UncaughtExceptionHandlerConfig.java:19, README.md:31). The
     // failing-DLT-sink test above pins terminate-on-failure and replay
-    // of the failed epoch (the session stop in Shutdown.awaitOrShutdown
-    // is not exercised: it would stop the shared test session); this
-    // pins the other half — resume-from-checkpoint with restored source
-    // offsets AND restored dropDuplicatesWithinWatermark state.
-    import java.sql.Timestamp
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.StreamingCuration
+    // of the failed epoch; this pins the other half: a restart on the
+    // checkpoint resumes from the committed source offsets.
+    import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.operators.ErrorHandlingTopology
     implicit val sqlCtx = spark.sqlContext
-    def ts(m: Int) = new Timestamp(1700000000000L + m * 60000L)
-    val corpus = Seq((0L, "preexisting corpus doc")).toDF("doc_id", "text")
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val collected =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-    val seenBatches = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // (epoch, sink, rendered record), one entry per delivery
+    val seen = new ConcurrentLinkedQueue[(Long, String, String)]()
+    def sink(name: String): DataFrame => Unit = { df =>
+      val epoch = spark.sparkContext.getLocalProperty(MicroBatchExecution.BATCH_ID_KEY).toLong
+      df.collect().foreach(r => seen.add((epoch, name, ErrorChannelStages.render(r))))
+    }
+    val sinks = StreamingTopology.Sinks(output = sink("output"), processDlt = sink("process"),
+      deserializationDlt = sink("deser"), productionDlt = sink("production"))
+    val input = MemoryStream[(Array[Byte], Array[Byte])]
     val cp = java.nio.file.Files.createTempDirectory("graft-resume-cp").toString
-    def start() = StreamingCuration
-      .admitStream(StreamingCuration.dedupStream(
-        mem.toDF().toDF("ts", "doc_id", "text")), corpus)
-      .writeStream.option("checkpointLocation", cp)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val rows = df.collect().map(r =>
-          (batchId, r.getLong(1), r.getString(2)))
-        collected.synchronized { collected ++= rows; seenBatches += batchId }
-        ()
-      }.start()
+    def start() = StreamingTopology.start(input.toDF().toDF("key", "value"), sinks, cp,
+      maxRequestSize = Max, trigger = Trigger.ProcessingTime(0L))
+    /** Each record of `data` on the branch a batch recompute routes it to. */
+    def expected(data: Seq[(Array[Byte], Array[Byte])]): Seq[(String, String)] = {
+      val t = ErrorHandlingTopology(data.toDF("key", "value"), Max)
+      Seq("output" -> t.output, "process" -> t.processDlt,
+        "deser" -> t.deserializationDlt, "production" -> t.productionDlt)
+        .flatMap { case (n, df) => df.collect().map(r => n -> ErrorChannelStages.render(r)) }
+        .sorted
+    }
+    def deliveries(run: Seq[(Long, String, String)]) = run.map(d => (d._2, d._3)).sorted
 
-    // run 1: two committed micro-batches, then a clean stop
+    // run 1: two epochs, then a clean stop
     val q1 = start()
     try {
-      mem.addData((ts(0), 1L, "alpha beta"), (ts(1), 2L, "preexisting corpus doc"))
-      q1.processAllAvailable()
-      mem.addData((ts(2), 3L, "gamma delta"), (ts(3), 4L, "alpha beta"))
-      q1.processAllAvailable()
+      input.addData(mix("a")); q1.processAllAvailable()
+      input.addData(mix("b")); q1.processAllAvailable()
     } finally q1.stop()
-    val afterRun1 = collected.map(t => (t._2, t._3)).toSet
-    assert(afterRun1 == Set((1L, "alpha beta"), (3L, "gamma delta")),
-      "corpus doc anti-joined away; in-stream dup dropped")
+    val run1 = seen.asScala.toSeq
+    assert(run1.map(_._1).toSet == Set(0L, 1L), run1.map(_._1).distinct)
+    assert(deliveries(run1) == expected(mix("a") ++ mix("b")))
 
-    // while DOWN: more data arrives, including a dup of a run-1 doc
-    // (only restored dedup state can drop it) and a corpus dup
-    mem.addData((ts(4), 5L, "alpha beta"),
-      (ts(5), 6L, "epsilon zeta"),
-      (ts(6), 7L, "preexisting corpus doc"))
+    // while DOWN: more records arrive
+    input.addData(mix("down"))
 
-    // run 2: same checkpoint — must NOT re-emit run-1 output, must
-    // process the while-down arrivals exactly once
+    // run 2 on the same checkpoint
     val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-
-    val all = collected.map(t => (t._2, t._3)).toSeq
-    assert(all.size == all.distinct.size, s"re-emission after resume: $all")
-    assert(all.toSet == Set((1L, "alpha beta"), (3L, "gamma delta"),
-      (6L, "epsilon zeta")),
-      "exactly the batch-oracle survivor set across the restart")
-    // batch ids strictly increase across the restart — the resumed
-    // query continues the committed log instead of replaying it
-    assert(seenBatches.toSeq == seenBatches.toSeq.sorted &&
-      seenBatches.toSeq.distinct == seenBatches.toSeq,
-      s"batch ids must continue, not replay: $seenBatches")
+    try q2.processAllAvailable() finally q2.stop()
+    val run2 = seen.asScala.toSeq.drop(run1.size)
+    assert(run2.map(_._1).toSet == Set(2L),
+      s"batch ids must continue, not replay: ${run2.map(_._1).distinct}")
+    assert(deliveries(run2) == expected(mix("down")),
+      "run 2 must deliver exactly the while-down records, each once, on its branch")
   }
 }
 
